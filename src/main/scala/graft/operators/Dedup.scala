@@ -899,14 +899,11 @@ object Dedup {
     * SURVEY O12) — O(diameter) rounds, which for near-dup graphs (small
     * components) is 2–3.
     *
-    * Loop cost per round = ONE materializing action: the label update keeps
-    * the previous label alongside the new one, `localCheckpoint` (eager)
-    * materializes it with truncated lineage (no AQE replanning of an
-    * ever-deeper chain; blocks are ContextCleaner-released on GC, unlike
-    * `persist`), and convergence is a `where(new < prev).isEmpty` probe over
-    * the already-cached blocks — no second join, no recompute. On a
-    * multi-executor cluster swap `localCheckpoint` for a reliable
-    * `checkpoint` dir (local blocks die with their executor). */
+    * Loop cost per round = ONE materializing action through
+    * [[Graph.RoundLoop]]: the label update keeps the previous label
+    * alongside the new one, and convergence is a `where(new < prev).isEmpty`
+    * probe over the already-materialized blocks — no second join, no
+    * recompute. */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 20, maxDriverEdges: Long = 1L << 20): DataFrame = {
     // Materialize the (possibly expensive — LSH, inverted-index join) edge
@@ -995,16 +992,15 @@ object Dedup {
       return s.createDataFrame(
         s.sparkContext.parallelize(out.toSeq, 1), schema)
     }
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    unpersistBlocks(e0) // und is materialized; the one-sided copy is dead
-    var labels = und.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val und = Graph.symmetrize(e0, _.distinct())
+    // The label frames are node-sized and keep the shuffle plans: no
+    // broadcast gate, no compaction.
+    val loop = new Graph.RoundLoop(nEdges, small = false)
+    val init = loop.keep(und.select(col("a").as("id")).distinct()
+      .withColumn("lbl", col("id")))
+    val last = loop.iterate(init, maxIter) { (cur, iter) =>
+      // cur also carries the previous label (`prev`) from the last round.
+      val labels = cur.select(col("id"), col("lbl"))
       val neighborMin = und.join(labels, und("b") === labels("id"))
         .groupBy(und("a").as("nid")).agg(min(col("lbl")).as("nlbl"))
       val hop = labels.join(neighborMin, labels("id") === neighborMin("nid"), "left")
@@ -1017,27 +1013,18 @@ object Dedup {
       // per round: O(log D) rounds, so maxIter=20 covers ~2^20-diameter
       // graphs instead of 20-hop ones. One extra equality join per round on
       // the same key partitioning.
-      // Round 0 skips the jump: labels are still the identity map there, so
+      // Round 1 skips the jump: labels are still the identity map there, so
       // label-of-label ≡ label and the join would be a provable no-op — one
       // equality join (and its shuffle) saved per CC invocation.
-      val upd = (if (iter == 0)
-          hop.select(col("id"), col("prev"), col("lbl1").as("lbl"))
-        else hop.join(
-            labels.select(col("id").as("jid"), col("lbl").as("jlbl")),
-            hop("lbl1") === col("jid"), "left")
-          .select(col("id"), col("prev"),
-            least(col("lbl1"), coalesce(col("jlbl"), col("lbl1"))).as("lbl")))
-        .localCheckpoint()
-      converged = upd.where(col("lbl") < col("prev")).isEmpty
-      // upd is materialized and the convergence probe has run — release the
-      // previous iteration's blocks now instead of waiting for a driver GC
-      // (up to maxIter label snapshots otherwise pile up in the block store).
-      unpersistBlocks(labels)
-      labels = upd.select(col("id"), col("lbl"))
-      iter += 1
-    }
-    unpersistBlocks(und)
-    labels.select(col("id"), col("lbl").as("component"))
+      if (iter == 1) hop.select(col("id"), col("prev"), col("lbl1").as("lbl"))
+      else hop.join(
+          labels.select(col("id").as("jid"), col("lbl").as("jlbl")),
+          hop("lbl1") === col("jid"), "left")
+        .select(col("id"), col("prev"),
+          least(col("lbl1"), coalesce(col("jlbl"), col("lbl1"))).as("lbl"))
+    }(_.where(col("lbl") < col("prev")).isEmpty)
+    loop.release(und)
+    last.select(col("id"), col("lbl").as("component"))
   }
 
   /** Deterministically release a localCheckpoint'ed DataFrame's cached
@@ -1218,8 +1205,7 @@ object Dedup {
     * the maxDf cap bounds candidate fan-in) — no new wide exchange beyond
     * what the component pass already did. */
   def canonicalPick(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val comps = connectedComponents(
-      ngramJaccard(df, idCol, textCol), "id1", "id2")
+    val comps = ngramComponents(df, idCol, textCol)
       .select(col("id"), col("component"))
     val toks = df.select(col(idCol),
       expr(s"cast(size(filter(split($textCol, ' '), t -> t != '')) as bigint)")
@@ -1234,6 +1220,18 @@ object Dedup {
         w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .select(col(idCol), col("component"), col("n_tok"), col("rep_id"),
         (col(idCol) === col("rep_id")).as("kept"))
+  }
+
+  /** [[connectedComponents]] over [[ngramJaccard]] pairs (q54, q214).
+    * CC materializes its own copy of the pairs and its result never reads
+    * them, so the result's release cannot reach the pairs' index
+    * checkpoint: release it here, once CC has returned. */
+  private def ngramComponents(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val pairs = ngramJaccard(df, idCol, textCol)
+    val comps = connectedComponents(pairs, "id1", "id2")
+    unpersistBlocks(pairs)
+    comps
   }
 
   // --------------------------------------- cross-split near-dup leakage --
@@ -1287,8 +1285,7 @@ object Dedup {
       ngramJaccard(Tables.documents(s, d), "doc_id", "text")
         .orderBy(col("id1"), col("id2"))),
     "q54_neardup_components" -> ((s, d) =>
-      connectedComponents(
-        ngramJaccard(Tables.documents(s, d), "doc_id", "text"), "id1", "id2")
+      ngramComponents(Tables.documents(s, d), "doc_id", "text")
         .select(col("id").as("doc_id"), col("component"))
         .orderBy(col("doc_id"))),
     "q55_dedup_pipeline" -> ((s, d) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -11,9 +11,8 @@ import graft.Tables
   * The reference engine has no graph surface at all (its closest analog is
   * the iterative multi-job driver, `main.cpp:30-68` — re-run jobs until a
   * fixed point); this module generalizes that driver-loop shape to the
-  * canonical iterative-dataflow workload. The iteration style (driver-side
-  * loop, one localCheckpoint per round, eager block release) matches
-  * [[Dedup.connectedComponents]].
+  * canonical iterative-dataflow workload. Every iterative operator, and
+  * [[Dedup.connectedComponents]], runs through one [[RoundLoop]].
   *
   * Determinism: ranks are SCALED INTEGERS (`Scale` = 1e9 ≙ probability
   * 1.0) and every per-iteration step is integer arithmetic — `div` for the
@@ -66,6 +65,105 @@ object Graph {
   private def compactIf(df: DataFrame, small: Boolean): DataFrame =
     if (small) df.coalesce(8) else df
 
+  /** The round loop every iterative operator here runs: the reference's
+    * driver loop (`main.cpp:30-68`, rerun jobs until a fixed point) as one
+    * helper. [[sized]] opens one; [[Dedup.connectedComponents]], which has
+    * no broadcast gate, builds one with `small = false`. The discipline,
+    * stated once for every operator that links here:
+    *
+    *  - Per-round checkpoint. Each round's frame is compacted under the
+    *    ceiling ([[compactIf]]) and `localCheckpoint`ed ([[keep]]). The
+    *    lineage is cut every round, so the plan does not double per round.
+    *  - Eager release. A checkpoint's blocks are released ([[release]]) as
+    *    soon as nothing reads it any more — in [[iterate]], the previous
+    *    round's frame once the next one is materialized — instead of
+    *    waiting for a driver GC.
+    *  - Leaves stay. Frames the returned plan still reads (the final
+    *    frame, lazy unions of per-round frames, an edge checkpoint the
+    *    result joins) are never released here: truncated lineage cannot
+    *    recompute them. They are leaves of the result, and the caller's
+    *    release of the result (`Dedup.unpersistBlocks`, as Bench does)
+    *    frees them.
+    *  - Loop control ([[run]]). At most `maxRounds` rounds, stopping early
+    *    once `stop` holds on a round's frame (empty, unchanged, converged).
+    *    `stop` is not asked after the last round: its answer could not
+    *    change the output.
+    *
+    * On a multi-executor cluster the checkpoints must become reliable
+    * `checkpoint`s: local checkpoint blocks die with their executor, and
+    * truncated lineage cannot rebuild them. */
+  private[operators] final class RoundLoop(val rows: Long, val small: Boolean) {
+    def bc(df: DataFrame): DataFrame = bcastIf(df, small)
+
+    /** Materialize one loop frame: compact under the ceiling, checkpoint. */
+    def keep(df: DataFrame): DataFrame = compactIf(df, small).localCheckpoint()
+
+    def release(dfs: DataFrame*): Unit = dfs.foreach(Dedup.unpersistBlocks)
+
+    /** Runs `round(1)`, `round(2)`, … (each returns its round's frame)
+      * until `stop` holds on a frame or `maxRounds` rounds ran; returns
+      * the number of rounds run. */
+    def run(maxRounds: Int)(round: Int => DataFrame)(
+        stop: DataFrame => Boolean): Int = {
+      var r = 0
+      var done = false
+      while (!done && r < maxRounds) {
+        r += 1
+        val frame = round(r)
+        done = r < maxRounds && stop(frame)
+      }
+      r
+    }
+
+    /** [[run]] where each round's frame replaces the previous one: `step`
+      * builds the next frame from the current one (starting at the
+      * materialized `init`), [[keep]] materializes it and the current one
+      * is released. Returns the last frame. */
+    def iterate(init: DataFrame, maxRounds: Int)(
+        step: (DataFrame, Int) => DataFrame)(
+        stop: DataFrame => Boolean): DataFrame = {
+      var cur = init
+      run(maxRounds) { r =>
+        val next = keep(step(cur, r))
+        release(cur)
+        cur = next
+        next
+      }(stop)
+      cur
+    }
+  }
+
+  /** Counts the materialized `df` ONCE and opens a [[RoundLoop]] on the
+    * broadcast path when the count is within [[iterBcastMaxRows]]. `df`
+    * bounds the operator's loop frames: an edge checkpoint, or the node
+    * list itself. */
+  private def sized(df: DataFrame): RoundLoop = {
+    val n = df.count()
+    new RoundLoop(n, n <= iterBcastMaxRows(df.sparkSession))
+  }
+
+  private def ab(edges: DataFrame, src: String, dst: String): DataFrame =
+    edges.select(col(src).as("a"), col(dst).as("b"))
+
+  /** Edge prep for the undirected operators: materialize the `(a, b, …)`
+    * frame `e` once (its lineage may be expensive and is read twice), add
+    * every edge reversed, deduplicate with `dedup` and materialize the
+    * result; see [[symmetrize]]. */
+  private def undirected(e: DataFrame,
+      dedup: DataFrame => DataFrame): DataFrame =
+    symmetrize(e.localCheckpoint(), dedup)
+
+  /** [[undirected]] over an already materialized `e0`, whose blocks are
+    * released once the symmetrized checkpoint holds everything. */
+  private[operators] def symmetrize(e0: DataFrame,
+      dedup: DataFrame => DataFrame): DataFrame = {
+    val swapped = col("b").as("a") +: col("a").as("b") +:
+      e0.columns.drop(2).toSeq.map(col)
+    val und = dedup(e0.union(e0.select(swapped: _*))).localCheckpoint()
+    Dedup.unpersistBlocks(e0)
+    und
+  }
+
   /** Undirected PageRank over `edges`, returned as the global top-`topK`
     * (node, rank_fp) rows, rank_fp in `Scale` units.
     *
@@ -79,13 +177,10 @@ object Graph {
     * source id) + one shuffle-on-destination sum — the standard distributed
     * PageRank step, partitioned by node id throughout; no step is
     * node-count- or edge-count-quadratic and the driver holds only loop
-    * control. Per-round localCheckpoint truncates the lineage (otherwise
-    * the plan doubles per iteration) and the previous round's blocks are
-    * released eagerly. The final top-k is `orderBy.limit` →
-    * TakeOrderedAndProject, not a global sort. On a real cluster the
-    * checkpoints become reliable `checkpoint`s and the edge frame would be
-    * pre-partitioned by source so every round's join is exchange-free on
-    * the edge side. */
+    * control ([[RoundLoop]]). The final top-k is `orderBy.limit` →
+    * TakeOrderedAndProject, not a global sort. On a real cluster the edge
+    * frame would be pre-partitioned by source so every round's join is
+    * exchange-free on the edge side. */
   def pageRank(edges: DataFrame, src: String, dst: String,
       iters: Int = 3, dampingPct: Int = 85, topK: Int = 20): DataFrame = {
     require(iters >= 1 && iters <= 100,
@@ -93,52 +188,50 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"pageRank: dampingPct must be in [0, 100], got $dampingPct")
     require(topK >= 1, s"pageRank: topK must be >= 1, got $topK")
-    // Teleport mass per node, in Scale units: (1 - d) / N. Exact long
-    // arithmetic; the 'div nn' happens in-plan (N is a 1-row broadcast).
-    val baseNumer: Long = (100L - dampingPct) * Scale / 100L
+    rankWalk(edges, src, dst, None, iters, dampingPct, topK)
+  }
 
-    // Materialize the (possibly expensive) edge lineage once, then
-    // symmetrize + dedupe: undirected, unweighted.
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b")).localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+  /** The integer-mass walk behind [[pageRank]] (`sources` = None: the
+    * (1−d) teleport mass spreads over every node) and
+    * [[personalizedPageRank]] (it goes to the sources only). Returns the
+    * top-`topK` (node, rank_fp) rows. */
+  private def rankWalk(edges: DataFrame, src: String, dst: String,
+      sources: Option[Seq[String]], iters: Int, dampingPct: Int,
+      topK: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    val und = undirected(ab(edges, src, dst), _.distinct())
     // Every node appears as a source in the symmetrized set, so the degree
     // frame doubles as the node list. Checkpointed: read every round.
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    // N is a driver long now (one count over the materialized checkpoint):
-    // the per-round teleport term becomes a LITERAL (same floor division —
-    // Scala Long `/` on non-negatives ≡ SQL `div`), dropping the former
-    // 1-row nRow crossJoin subtree from every round; and the node-bounded
-    // ranks/sums frames broadcast into the per-round joins when N is under
-    // the ceiling (r22, guide §2.4 — see iterBcastMaxRows).
-    val nNodes = deg.count()
-    val small = nNodes <= iterBcastMaxRows(edges.sparkSession)
-    val initR = if (nNodes == 0) 0L else Scale / nNodes
-    val baseR = if (nNodes == 0) 0L else baseNumer / nNodes
-    var ranks = compactIf(deg
-      .select(col("node"), col("deg"), lit(initR).as("r")), small)
-      .localCheckpoint()
-    var iter = 0
-    while (iter < iters) {
-      val rk = bcastIf(ranks, small)
-      val msgs = und.join(rk, und("a") === rk("node"))
+    // N is a driver long (one count over the materialized checkpoint): the
+    // per-round teleport term is a LITERAL (same floor division — Scala
+    // Long `/` on non-negatives ≡ SQL `div`), and the node-bounded
+    // ranks/sums frames broadcast when N is under the ceiling.
+    val loop = sized(deg)
+    val mass = sources.fold(loop.rows)(_.size.toLong)
+    val (initR, baseR) = if (mass == 0) (0L, 0L)
+      else (Scale / mass, (100L - dampingPct) * Scale / 100L / mass)
+    val srcSet = sources.map(s => broadcast(s.toDF("snode")))
+    // A node's teleport share `perNode`: every node's, or the sources' only.
+    def teleport(df: DataFrame, perNode: Long): (DataFrame, Column) =
+      srcSet.fold((df, lit(perNode))) { ss =>
+        (df.join(ss, deg("node") === col("snode"), "left"),
+          when(col("snode").isNotNull, lit(perNode)).otherwise(lit(0L)))
+      }
+    val (d0, r0) = teleport(deg, initR)
+    val init = loop.keep(d0.select(col("node"), col("deg"), r0.as("r")))
+    val ranks = loop.iterate(init, iters) { (ranks, _) =>
+      val rk = loop.bc(ranks)
+      val sums = und.join(rk, und("a") === rk("node"))
         .select(und("b").as("dst_"), expr("r div deg").as("c"))
-      val sums = msgs.groupBy(col("dst_")).agg(sum(col("c")).as("sc"))
-      val upd = compactIf(
-        deg.join(bcastIf(sums, small), deg("node") === sums("dst_"))
-          .select(deg("node"), deg("deg"),
-            (lit(baseR)
-              + expr(s"(${dampingPct}L * sc) div 100")).as("r")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(ranks)
-      ranks = upd
-      iter += 1
-    }
-    Dedup.unpersistBlocks(und)
-    Dedup.unpersistBlocks(deg)
+        .groupBy(col("dst_")).agg(sum(col("c")).as("sc"))
+      val (d, base) = teleport(
+        deg.join(loop.bc(sums), deg("node") === sums("dst_")), baseR)
+      d.select(deg("node"), deg("deg"),
+        (base + expr(s"(${dampingPct}L * sc) div 100")).as("r"))
+    }(_ => false)
+    loop.release(und, deg)
     ranks.select(col("node"), col("r").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("node"))
       .limit(topK)
@@ -159,29 +252,23 @@ object Graph {
     * partitioning-independent and hash-gateable. Returns one row:
     * (n_nodes, n_edges, n_triangles). */
   def triangleCount(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
-      .localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+    val und = undirected(ab(edges, src, dst).filter(col("a") =!= col("b")),
+      _.distinct())
     // Node-bounded frames (deg, the oriented edge list) broadcast into the
     // orientation/wedge/closing joins when the driver-measured edge count
     // is under the ceiling (r22, guide §2.4/§3.1): the whole enumeration
     // then runs map-side over the checkpoint scans — the only exchange
     // left is deg's own groupBy. Counts are unchanged either way.
-    val undN = und.count()
-    val small = undN <= iterBcastMaxRows(edges.sparkSession)
+    val loop = sized(und)
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
     // Orient each undirected edge once: keep (a, b) iff (deg(a), a) <
     // (deg(b), b). und holds both directions, so exactly one survives.
     val withDeg = und
-      .join(bcastIf(deg.withColumnRenamed("node", "a_"), small),
+      .join(loop.bc(deg.withColumnRenamed("node", "a_")),
         col("a") === col("a_"))
       .withColumnRenamed("deg", "da")
-      .join(bcastIf(deg.withColumnRenamed("node", "b_")
-        .withColumnRenamed("deg", "db"), small),
+      .join(loop.bc(deg.withColumnRenamed("node", "b_")
+        .withColumnRenamed("deg", "db")),
         col("b") === col("b_"))
     val oriented = withDeg
       .filter(col("da") < col("db") ||
@@ -189,9 +276,9 @@ object Graph {
       .select(col("a"), col("b"))
       .localCheckpoint()
     val wedges = oriented.as("e1")
-      .join(bcastIf(oriented.as("e2"), small), col("e1.b") === col("e2.a"))
+      .join(loop.bc(oriented.as("e2")), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e2.b").as("wc"))
-    val tri = wedges.join(bcastIf(oriented, small),
+    val tri = wedges.join(loop.bc(oriented),
       col("wa") === col("a") && col("wc") === col("b"), "left_semi")
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
     val nEdges = oriented.agg(count(lit(1)).as("n_edges"))
@@ -248,56 +335,52 @@ object Graph {
     * node id) + ONE anti-join against the settled set — both partitioned
     * by node id, nothing quadratic, and the frontier-empty early exit
     * bounds rounds at min(eccentricity, maxDepth). The driver holds loop
-    * control and one count per round; localCheckpoint truncates lineage
-    * per round and prior rounds' blocks release eagerly, exactly the
-    * [[pageRank]] discipline. Distances are small exact ints — the gate
-    * replays the level semantics via DuckDB's recursive CTE (min over
-    * walk lengths ≡ BFS level). */
+    * control ([[RoundLoop]]) and one count per round. Distances are small
+    * exact ints — the gate replays the level semantics via DuckDB's
+    * recursive CTE (min over walk lengths ≡ BFS level). */
   def shortestPaths(edges: DataFrame, src: String, dst: String,
       sourceNode: String, maxDepth: Int = 6): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 64,
       s"shortestPaths: maxDepth must be in [1, 64], got $maxDepth")
-    val sess = edges.sparkSession
-    import sess.implicits._
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b")).localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+    import edges.sparkSession.implicits._
+    val und = undirected(ab(edges, src, dst), _.distinct())
     // Every node appears as a source in the symmetrized set, so the
-    // frontier and settled frames are bounded by |und| rows — one count
-    // over the materialized checkpoint decides the broadcast path (r22,
-    // guide §2.4: the frontier expansion join and the settled anti-join
-    // then run map-side, leaving ONE exchange per level — the distinct).
-    val undN = und.count()
-    val small = undN <= iterBcastMaxRows(sess)
-    val init = Seq((sourceNode, 0)).toDF("node", "dist").localCheckpoint()
-    // settled accumulates as a LAZY union of the per-level checkpointed
-    // frontiers (the r21 bridges discipline): the old per-level
-    // settled.union(nf).localCheckpoint() re-copied O(V) rows every level
-    // — O(V·depth²) checkpoint writes for identical content (guide §2.4).
-    // Every frontier is a leaf of the returned plan, so the caller's
-    // result-block release (the Bench discipline) frees them all.
-    var settled = init
-    var frontier = init
-    var depth = 0
-    var frontierN = 1L
-    while (depth < maxDepth && frontierN > 0) {
-      depth += 1
-      val f = bcastIf(frontier.select(col("node")), small)
-      val nbrs = und.join(f, und("a") === f("node"))
-        .select(und("b").as("node")).distinct()
-      val nf = compactIf(
-        nbrs.join(bcastIf(settled.select(col("node")), small),
-            Seq("node"), "left_anti")
-          .select(col("node"), lit(depth).as("dist")), small)
-        .localCheckpoint()
-      frontierN = nf.count()
-      settled = settled.union(nf)
-      frontier = nf
-    }
-    Dedup.unpersistBlocks(und)
+    // frontier and settled frames are bounded by |und| rows.
+    val loop = sized(und)
+    val start = loop.keep(Seq((sourceNode, 0)).toDF("node", "dist"))
+    val (settled, _, _) = expandLevels(und, loop, start, maxDepth)
+    loop.release(und)
     settled
+  }
+
+  /** Level expansion, shared by [[shortestPaths]] and the [[bridges]] BFS:
+    * from the materialized `(node, dist = 0)` frame `start`, each round
+    * joins the frontier to `und`, drops nodes already settled and keeps
+    * the rest at the round's depth, until a frontier is empty or
+    * `maxRounds` rounds ran. Under the ceiling the expansion join and the
+    * settled anti-join run map-side, leaving ONE exchange per level (the
+    * distinct).
+    *
+    * The settled set is a LAZY union of the per-level frontiers (r21):
+    * re-checkpointing the merged frame every level copied O(V) rows per
+    * level — O(V·depth²) checkpoint writes for identical content (guide
+    * §2.4). Every frontier is a leaf of it. Returns the settled set, the
+    * frontiers (newest first, `start` last) and the rounds run. */
+  private def expandLevels(und: DataFrame, loop: RoundLoop, start: DataFrame,
+      maxRounds: Int): (DataFrame, List[DataFrame], Int) = {
+    var settled = start
+    var frontiers = List(start)
+    val rounds = loop.run(maxRounds) { depth =>
+      val f = loop.bc(frontiers.head.select(col("node")))
+      val next = loop.keep(und.join(f, und("a") === f("node"))
+        .select(und("b").as("node")).distinct()
+        .join(loop.bc(settled.select(col("node"))), Seq("node"), "left_anti")
+        .select(col("node"), lit(depth).as("dist")))
+      settled = settled.union(next)
+      frontiers ::= next
+      next
+    }(_.count() == 0)
+    (settled, frontiers, rounds)
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ `k` —
@@ -314,60 +397,40 @@ object Graph {
     * endpoints against the shrinking survivor set) + one degree count —
     * all partitioned by node id, nothing quadratic; rounds are bounded by
     * the degeneracy peel depth (typically ≪ node count; `maxRounds` is
-    * the hard cap). Survivors checkpoint per round with eager release —
-    * the [[pageRank]] discipline. Output: (node, core_degree), the
-    * node's degree WITHIN the core. */
+    * the hard cap). Survivors go through the [[RoundLoop]]. Output:
+    * (node, core_degree), the node's degree WITHIN the core. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
       maxRounds: Int = 8): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"kCore: maxRounds must be in [1, 64], got $maxRounds")
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
-      .localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+    val und = undirected(ab(edges, src, dst).filter(col("a") =!= col("b")),
+      _.distinct())
     // The survivor set is node-bounded (≤ |und| — every node occurs as a
-    // source): broadcast it into the two per-round semi-joins when the
-    // driver-measured edge count is under the ceiling (r22, guide §2.4) —
-    // each round then keeps only its degree-count exchange.
-    val undN = und.count()
-    val small = undN <= iterBcastMaxRows(edges.sparkSession)
-    def survivors(aliveOpt: Option[DataFrame]): DataFrame = {
-      val scoped = aliveOpt.fold(und) { alive =>
-        und.join(bcastIf(alive.withColumnRenamed("node", "a"), small),
-            Seq("a"), "left_semi")
-          .join(bcastIf(alive.withColumnRenamed("node", "b"), small),
-            Seq("b"), "left_semi")
-      }
-      scoped.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
+    // source): under the ceiling each round keeps only its degree-count
+    // exchange.
+    val loop = sized(und)
+    def scoped(alive: DataFrame): DataFrame =
+      und.join(loop.bc(alive.withColumnRenamed("node", "a")),
+          Seq("a"), "left_semi")
+        .join(loop.bc(alive.withColumnRenamed("node", "b")),
+          Seq("b"), "left_semi")
+    def survivors(in: DataFrame): DataFrame =
+      in.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-    }
-    var alive = compactIf(survivors(None), small).localCheckpoint()
-    var n = alive.count()
-    var round = 1
-    var converged = false
-    while (round < maxRounds && !converged && n > 0) {
-      round += 1
-      val next = compactIf(survivors(Some(alive)), small).localCheckpoint()
-      val n2 = next.count()
+    val alive0 = loop.keep(survivors(und))
+    var n = alive0.count()
+    val alive = loop.iterate(alive0, if (n == 0) 0 else maxRounds - 1) {
+      (alive, _) => survivors(scoped(alive))
+    } { next =>
       // The survivor set only shrinks, so equal counts ⇒ equal sets.
-      converged = n2 == n
-      Dedup.unpersistBlocks(alive)
-      alive = next
-      n = n2
+      val prev = n
+      n = next.count()
+      n == prev || n == 0
     }
-    // und and alive stay checkpointed: both are LEAVES of the returned
-    // plan (releasing them here would kill blocks the caller still reads —
-    // checkpoint lineage cannot recompute). The caller's result-block
-    // release (the Bench discipline) frees them with the result.
-    und.join(bcastIf(alive.withColumnRenamed("node", "a"), small),
-        Seq("a"), "left_semi")
-      .join(bcastIf(alive.withColumnRenamed("node", "b"), small),
-        Seq("b"), "left_semi")
+    // und and alive are leaves of the returned plan (see RoundLoop).
+    scoped(alive)
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
   }
 
@@ -380,46 +443,33 @@ object Graph {
     * tie-break makes round t a pure function of the input edge set, so
     * the DuckDB oracle replays every round exactly.
     *
-    * Scale shape (the [[pageRank]] discipline): one equality join +
-    * one (node, label)-bounded vote aggregate + one argmax collapse per
-    * round, all keyed on node ids; per-round localCheckpoint with eager
-    * release. The argmax is `min(struct(-cnt, lbl))` — a plain mergeable
-    * aggregate, never a per-node sort. Output: (node, lbl) after
-    * `rounds` rounds. */
+    * Scale shape ([[RoundLoop]]): one equality join + one (node,
+    * label)-bounded vote aggregate + one argmax collapse per round, all
+    * keyed on node ids. The argmax is `min(struct(-cnt, lbl))` — a plain
+    * mergeable aggregate, never a per-node sort. Output: (node, lbl)
+    * after `rounds` rounds. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"labelPropagation: rounds must be in [1, 16], got $rounds")
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
-      .localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+    val und = undirected(ab(edges, src, dst).filter(col("a") =!= col("b")),
+      _.distinct())
     // Symmetry ⇒ every node occurs as a source, so the initial label
     // frame is also the node list; no node can lose its vote row later.
-    // Labels are node-bounded (≤ |und|): broadcast them into the per-round
-    // vote join when the edge count is under the ceiling (r22, guide §2.4).
-    val undN = und.count()
-    val small = undN <= iterBcastMaxRows(edges.sparkSession)
-    var labels = und.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val lbf = bcastIf(labels, small)
-      val votes = und.join(lbf, und("a") === lbf("node"))
+    // Labels are node-bounded (≤ |und|).
+    val loop = sized(und)
+    val init = loop.keep(und.select(col("a").as("node")).distinct()
+      .withColumn("lbl", col("node")))
+    val labels = loop.iterate(init, rounds) { (labels, _) =>
+      val lbf = loop.bc(labels)
+      und.join(lbf, und("a") === lbf("node"))
         .groupBy(und("b").as("node2"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
-      val next = compactIf(votes
         .groupBy(col("node2").as("node"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
-        .select(col("node"), col("m.l").as("lbl")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(labels)
-      labels = next
-    }
-    Dedup.unpersistBlocks(und)
+        .select(col("node"), col("m.l").as("lbl"))
+    }(_ => false)
+    loop.release(und)
     labels
   }
 
@@ -595,52 +645,40 @@ object Graph {
     *
     * Scale shape: per iteration, two edge-keyed joins against the
     * (node, score) frames and two keyed aggregates with map-side
-    * partials; the max is a 1-row broadcast. localCheckpoint breaks the
-    * growing lineage each round (the q110 iterative pattern, blocks
-    * released via unpersistBlocks). Final cut: TakeOrderedAndProject
-    * per role, k-bounded union. */
+    * partials; the max is a 1-row broadcast. Rounds run through the
+    * [[RoundLoop]]. Final cut: TakeOrderedAndProject per role, k-bounded
+    * union. */
   def hits(edges: DataFrame, src: String, dst: String, iters: Int = 3,
       topK: Int = 20): DataFrame = {
     require(iters >= 1 && iters <= 20,
       s"hits: iters must be in [1, 20], got $iters")
     require(topK >= 1, s"hits: topK must be >= 1, got $topK")
-    val e = edges.select(col(src).as("a"), col(dst).as("b"))
-      .distinct().localCheckpoint()
-    // Score frames are node-bounded (≤ |e| rows each): broadcast them into
-    // the per-half-iteration joins when the driver-measured edge count is
-    // under the ceiling (r22, guide §2.4) — each half-iteration keeps only
-    // its keyed-sum exchange.
-    val eN = e.count()
-    val small = eN <= iterBcastMaxRows(edges.sparkSession)
-    var hub = compactIf(e.select(col("a")).distinct()
-      .select(col("a"), lit(Scale).as("h")), small).localCheckpoint()
-    var auth: DataFrame = null
-    var iter = 0
-    while (iter < iters) {
-      val ar = e.join(bcastIf(hub, small), "a").groupBy(col("b"))
-        .agg(sum(col("h").cast("decimal(38,0)")).as("ar"))
-      val am = ar.agg(max(col("ar")).as("am"))
-      val newAuth = compactIf(ar.crossJoin(broadcast(am))
-        .select(col("b"),
-          expr(s"cast((ar * ${Scale}L) div am as bigint)").as("au")), small)
-        .localCheckpoint()
-      if (auth != null) Dedup.unpersistBlocks(auth)
-      auth = newAuth
-      val hr = e.join(bcastIf(auth, small), "b").groupBy(col("a"))
-        .agg(sum(col("au").cast("decimal(38,0)")).as("hr"))
-      val hm = hr.agg(max(col("hr")).as("hm"))
-      val newHub = compactIf(hr.crossJoin(broadcast(hm))
-        .select(col("a"),
-          expr(s"cast((hr * ${Scale}L) div hm as bigint)").as("h")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(hub)
-      hub = newHub
-      iter += 1
+    val e = ab(edges, src, dst).distinct().localCheckpoint()
+    // Score frames are node-bounded (≤ |e| rows each): under the ceiling
+    // each half-iteration keeps only its keyed-sum exchange.
+    val loop = sized(e)
+    // One half-iteration: sum the `by`-side scores onto the `to` side over
+    // e, then L∞-normalize to Scale units as column `out`. The authority
+    // half (by a, to b) and the hub half (by b, to a) are mirror images.
+    def half(score: DataFrame, by: String, to: String, out: String) = {
+      val s = e.join(loop.bc(score), by).groupBy(col(to))
+        .agg(sum(col(score.columns(1)).cast("decimal(38,0)")).as("_s"))
+      s.crossJoin(broadcast(s.agg(max(col("_s")).as("_m"))))
+        .select(col(to), expr(s"cast((_s * ${Scale}L) div _m as bigint)").as(out))
     }
+    val hub0 = loop.keep(e.select(col("a")).distinct()
+      .select(col("a"), lit(Scale).as("h")))
+    var authOpt: Option[DataFrame] = None
+    val hub = loop.iterate(hub0, iters) { (hub, _) =>
+      val au = loop.keep(half(hub, "a", "b", "au"))
+      authOpt.foreach(loop.release(_))
+      authOpt = Some(au)
+      half(au, "b", "a", "h")
+    }(_ => false)
+    val auth = authOpt.get
     // The result reads only the final auth/hub checkpoints — the edge
-    // checkpoint is not a leaf of the returned plan and would otherwise
-    // outlive the query in the block store (r22 leak audit).
-    Dedup.unpersistBlocks(e)
+    // checkpoint is not a leaf of the returned plan.
+    loop.release(e)
     val topAuth = auth
       .select(lit("authority").as("role"), col("b").as("node"),
         col("au").as("score_fp"))
@@ -684,62 +722,41 @@ object Graph {
     * IMPROVED this round can improve a neighbor next round, so the
     * per-round join input shrinks toward convergence instead of staying
     * corpus-sized (the standard delta-stepping-lite optimization).
-    * Driver holds loop control + one count per round; localCheckpoint
-    * truncates lineage with eager block release — the [[pageRank]]/
-    * [[shortestPaths]] discipline. */
+    * Driver holds loop control ([[RoundLoop]]) + one count per round. */
   def sssp(edges: DataFrame, src: String, dst: String, wCol: String,
       sourceNode: String, maxRounds: Int = 6): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"sssp: maxRounds must be in [1, 64], got $maxRounds")
-    val sess = edges.sparkSession
-    import sess.implicits._
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"),
-      col(wCol).cast("long").as("w")).localCheckpoint()
+    import edges.sparkSession.implicits._
     // Undirected: symmetrize, then keep the MIN weight per directed pair
     // (parallel edges can only help via their cheapest member).
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b"),
-        col("w")))
-      .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
+    val und = undirected(
+      edges.select(col(src).as("a"), col(dst).as("b"),
+        col(wCol).cast("long").as("w")),
+      _.groupBy(col("a"), col("b")).agg(min(col("w")).as("w")))
     // The frontier and the settled distance frame are node-bounded
-    // (≤ |und| — symmetry puts every node in the source column): broadcast
-    // them into the relaxation join and the improvement left-join when the
-    // driver-measured edge count is under the ceiling (r22, guide §2.4) —
-    // each round then keeps two exchanges (the keyed min aggregates).
-    val undN = und.count()
-    val small = undN <= iterBcastMaxRows(sess)
-    var dist = Seq((sourceNode, 0L)).toDF("node", "dist").localCheckpoint()
-    var frontier = dist
-    var round = 0
-    var improvedN = 1L
-    while (round < maxRounds && improvedN > 0) {
-      round += 1
-      val f = bcastIf(frontier, small)
+    // (≤ |und| — symmetry puts every node in the source column): under the
+    // ceiling each round keeps two exchanges (the keyed min aggregates).
+    val loop = sized(und)
+    var frontier = loop.keep(Seq((sourceNode, 0L)).toDF("node", "dist"))
+    val dist = loop.iterate(frontier, maxRounds) { (dist, _) =>
+      val f = loop.bc(frontier)
       val cand = und.join(f, und("a") === f("node"))
-        .select(und("b").as("node"),
-          (f("dist") + und("w")).as("d"))
+        .select(und("b").as("node"), (f("dist") + und("w")).as("d"))
         .groupBy(col("node")).agg(min(col("d")).as("d"))
-      val improved = compactIf(
-        cand.join(bcastIf(dist, small), Seq("node"), "left")
-          .filter(col("dist").isNull || col("d") < col("dist"))
-          .select(col("node"), col("d").as("dist")), small)
-        .localCheckpoint()
-      improvedN = improved.count()
+      val improved = loop.keep(cand.join(loop.bc(dist), Seq("node"), "left")
+        .filter(col("dist").isNull || col("d") < col("dist"))
+        .select(col("node"), col("d").as("dist")))
+      // Round 1's frontier IS dist, which the merge below still reads.
+      if (frontier ne dist) loop.release(frontier)
+      frontier = improved
       // improved rows strictly beat their settled entries, so the merge
       // is a keyed min over the union — ONE aggregate, no outer join.
-      val nd = compactIf(dist.union(improved)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(frontier)
-      Dedup.unpersistBlocks(dist)
-      dist = nd
-      frontier = improved
-    }
+      dist.union(improved).groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }(_ => frontier.count() == 0)
     // The last round's (possibly empty) improved frame is not part of the
-    // returned plan — release it with the loop (r22 leak audit).
-    if (frontier ne dist) Dedup.unpersistBlocks(frontier)
-    Dedup.unpersistBlocks(und)
+    // returned plan.
+    loop.release(frontier, und)
     dist
   }
 
@@ -828,7 +845,7 @@ object Graph {
     * longs in `Scale` units, `div`-floored splits — summation-order-
     * invariant, so cluster-reproducible AND hash-gateable), same
     * per-round shape: one equality join + one shuffle-on-destination
-    * exact sum, per-round localCheckpoint with eager release.
+    * exact sum — the one [[rankWalk]] implementation.
     *
     * Init: `Scale div |S|` on each source, 0 elsewhere; update:
     * r' = [node ∈ S] · ((1−d)·Scale div |S|) + d·Σ r(u) div deg(u).
@@ -851,51 +868,7 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"personalizedPageRank: dampingPct must be in [0, 100], got $dampingPct")
     require(topK >= 1, s"personalizedPageRank: topK must be >= 1, got $topK")
-    import edges.sparkSession.implicits._
-    val nS = sources.length.toLong
-    val initPerSrc: Long = Scale / nS
-    val basePerSrc: Long = (100L - dampingPct) * Scale / 100L / nS
-    val srcSet = broadcast(sources.toDF("snode"))
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b")).localCheckpoint()
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    Dedup.unpersistBlocks(e0)
-    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // Ranks/sums are node-bounded: broadcast them into the per-round joins
-    // when the driver-measured node count is under the ceiling (r22,
-    // guide §2.4) — each round then keeps only the keyed-sum exchange.
-    val nNodes = deg.count()
-    val small = nNodes <= iterBcastMaxRows(edges.sparkSession)
-    var ranks = compactIf(
-      deg.join(srcSet, deg("node") === col("snode"), "left")
-        .select(col("node"), col("deg"),
-          when(col("snode").isNotNull, lit(initPerSrc)).otherwise(lit(0L))
-            .as("r")), small)
-      .localCheckpoint()
-    var iter = 0
-    while (iter < iters) {
-      val rk = bcastIf(ranks, small)
-      val msgs = und.join(rk, und("a") === rk("node"))
-        .select(und("b").as("dst_"), expr("r div deg").as("c"))
-      val sums = msgs.groupBy(col("dst_")).agg(sum(col("c")).as("sc"))
-      val upd = compactIf(
-        deg.join(bcastIf(sums, small), deg("node") === sums("dst_"))
-          .join(srcSet, deg("node") === col("snode"), "left")
-          .select(deg("node"), deg("deg"),
-            (when(col("snode").isNotNull, lit(basePerSrc)).otherwise(lit(0L))
-              + expr(s"(${dampingPct}L * sc) div 100")).as("r")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(ranks)
-      ranks = upd
-      iter += 1
-    }
-    Dedup.unpersistBlocks(und)
-    Dedup.unpersistBlocks(deg)
-    ranks.select(col("node"), col("r").as("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("node"))
-      .limit(topK)
+    rankWalk(edges, src, dst, Some(sources), iters, dampingPct, topK)
   }
 
   private val q283: Q = (s, d) =>
@@ -963,16 +936,15 @@ object Graph {
     // driver-measured edge count is under the ceiling (r22, guide
     // §2.4/§3.1 — makes the AQE small-side decisions deterministic and
     // runs the whole enumeration map-side over the checkpoint scans).
-    val canonN = canon.count()
-    val small = canonN <= iterBcastMaxRows(edges.sparkSession)
+    val loop = sized(canon)
     val und = canon.select(col("a").as("u"), col("b").as("v"))
       .union(canon.select(col("b").as("u"), col("a").as("v")))
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("dg"))
     val o = canon
-      .join(bcastIf(deg.select(col("node").as("a"), col("dg").as("da")),
-        small), Seq("a"))
-      .join(bcastIf(deg.select(col("node").as("b"), col("dg").as("db")),
-        small), Seq("b"))
+      .join(loop.bc(deg.select(col("node").as("a"), col("dg").as("da"))),
+        Seq("a"))
+      .join(loop.bc(deg.select(col("node").as("b"), col("dg").as("db"))),
+        Seq("b"))
       .select(
         when(col("da") < col("db")
             || (col("da") === col("db") && col("a") < col("b")),
@@ -987,10 +959,10 @@ object Graph {
     // frame on every scan; monotonically_increasing_id is only stable
     // behind a checkpoint, which is why the tid rides here).
     val tri = o.as("e1")
-      .join(bcastIf(o.as("e2"), small), col("e1.ob") === col("e2.oa"))
+      .join(loop.bc(o.as("e2")), col("e1.ob") === col("e2.oa"))
       .select(col("e1.oa").as("wa"), col("e1.ob").as("wb"),
         col("e2.ob").as("wc"))
-      .join(bcastIf(o, small), col("wa") === col("oa") && col("wc") === col("ob"))
+      .join(loop.bc(o), col("wa") === col("oa") && col("wc") === col("ob"))
       .select(col("wa"), col("wb"), col("wc"))
       .withColumn("tid", monotonically_increasing_id())
       .localCheckpoint()
@@ -1007,68 +979,48 @@ object Graph {
           struct(least(col("wa"), col("wc")).as("a"),
             greatest(col("wa"), col("wc")).as("b")))).as("e"))
       .select(col("tid"), col("e.a").as("a"), col("e.b").as("b"))
-    Dedup.unpersistBlocks(o)
-    Dedup.unpersistBlocks(canon)
+    loop.release(o, canon)
     // tid frames (newly-dead sets) are triangle-bounded, not edge-bounded —
     // their broadcast decision takes the measured triangle count.
-    val triN = tri.count()
-    val smallTri = triN <= iterBcastMaxRows(edges.sparkSession)
+    val triLoop = sized(tri)
     // sup_1: every triangle is alive — one keyed count over the incidence.
-    var sup = te.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("support"))
-      .localCheckpoint()
-    // Accumulated dead-triangle tids as a LAZY UNION of the per-round
-    // checkpointed newly-dead frames (r22: the r21 form folded a LIST of
-    // frames through one left_anti per prior round — O(rounds²) join
-    // stages; one anti-join against the union scans the same rows in ONE
-    // stage). A triangle dies the FIRST round an edge of it is removed
-    // and must decrement exactly once.
-    var deadAcc: Option[DataFrame] = None
-    var deadCkpts: List[DataFrame] = Nil
-    var round = 0
-    var fixedPoint = false
-    while (round < rounds && !fixedPoint) {
-      round += 1
-      // Edges dropped this round. Zero-support edges (no triangle row)
-      // belong to no triangle, so dropping them kills nothing — the
-      // removed set from the support frame alone is complete.
-      val removed = sup.filter(col("support") < k - 2)
-        .select(col("a"), col("b"))
-      if (removed.isEmpty) {
-        // Monotone peel at a FIXED POINT: nothing removed ⇒ no triangle
-        // dies ⇒ no support changes ⇒ every remaining round recomputes
-        // the identical sup (the kCore early-exit argument, and this
-        // scaladoc's "a converged set is a fixed point — extra rounds
-        // are no-ops"). The probe is one scan of the ≤|edges|-row
-        // checkpointed support frame; it replaces up to
-        // (rounds − r)·4 no-op per-round stages (r22, guide §1.2).
-        fixedPoint = true
-      } else {
-        val touched = te.join(bcastIf(removed, small), Seq("a", "b"))
-          .select(col("tid")).distinct()
-        val newlyDead = compactIf(deadAcc.fold(touched)(d =>
-            touched.join(bcastIf(d, smallTri), Seq("tid"), "left_anti")),
-            smallTri)
-          .localCheckpoint()
-        val dec = te.join(bcastIf(newlyDead, smallTri), Seq("tid"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("_lost"))
-        val next = compactIf(sup.filter(col("support") >= k - 2)
-          .join(bcastIf(dec, small), Seq("a", "b"), "left")
-          .select(col("a"), col("b"),
-            (col("support") - coalesce(col("_lost"), lit(0L))).as("support"))
-          .filter(col("support") > 0), small)
-          .localCheckpoint()
-        Dedup.unpersistBlocks(sup)
-        deadCkpts ::= newlyDead
-        deadAcc = Some(deadAcc.fold(newlyDead)(_.union(newlyDead)))
-        sup = next
-      }
-    }
-    deadCkpts.foreach(Dedup.unpersistBlocks)
-    // The result is the final sup checkpoint alone — the triangle frame
-    // is not a leaf of the returned plan and leaked ~4 copies per bench
-    // pass in r21 (VERDICT r21 item 1).
-    Dedup.unpersistBlocks(tri)
+    val sup0 = loop.keep(te.groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("support")))
+    // Edges dropped by a round. Zero-support edges (no triangle row) belong
+    // to no triangle, so dropping them kills nothing — the removed set from
+    // the support frame alone is complete.
+    def removed(sup: DataFrame): DataFrame =
+      sup.filter(col("support") < k - 2).select(col("a"), col("b"))
+    // Monotone peel at a FIXED POINT: nothing removed ⇒ no triangle dies ⇒
+    // no support changes ⇒ every remaining round recomputes the identical
+    // sup (the kCore early-exit argument). The probe is one scan of the
+    // ≤|edges|-row support checkpoint; it replaces up to (rounds − r)·4
+    // no-op per-round stages (r22, guide §1.2).
+    def fixed(sup: DataFrame): Boolean = removed(sup).isEmpty
+    // Dead-triangle tids accumulate as a LAZY UNION of the per-round
+    // newly-dead checkpoints (newest first; one anti-join against the union
+    // scans the same rows as one per prior round, in ONE stage). A triangle
+    // dies the FIRST round an edge of it is removed and must decrement
+    // exactly once.
+    var dead: List[DataFrame] = Nil
+    val sup = if (fixed(sup0)) sup0 else loop.iterate(sup0, rounds) { (sup, _) =>
+      val touched = te.join(loop.bc(removed(sup)), Seq("a", "b"))
+        .select(col("tid")).distinct()
+      val newlyDead = triLoop.keep(dead.reverse.reduceOption(_.union(_))
+        .fold(touched)(d =>
+          touched.join(triLoop.bc(d), Seq("tid"), "left_anti")))
+      dead ::= newlyDead
+      val dec = te.join(triLoop.bc(newlyDead), Seq("tid"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("_lost"))
+      sup.filter(col("support") >= k - 2)
+        .join(loop.bc(dec), Seq("a", "b"), "left")
+        .select(col("a"), col("b"),
+          (col("support") - coalesce(col("_lost"), lit(0L))).as("support"))
+        .filter(col("support") > 0)
+    }(fixed)
+    // The result is the final sup checkpoint alone — neither the dead
+    // sets nor the triangle frame are leaves of the returned plan.
+    loop.release(tri :: dead: _*)
     sup
   }
 
@@ -1095,13 +1047,13 @@ object Graph {
     * the oracle replays the identical arithmetic, so the gate is stable
     * regardless.
     *
-    * All stages are bounded dataflow rounds in the q110 discipline:
+    * All stages are bounded dataflow rounds through the [[RoundLoop]]:
     * per-component BFS (roots = [[Dedup.connectedComponents]] min
     * labels; loop until the frontier empties, required within
     * `maxRounds`), parent = min neighbor one level up (a keyed min —
-    * deterministic), ancestor closure built one parent-hop per round
-    * (pairs unique by construction — a tree ancestor chain never
-    * repeats), ONE subtree-XOR keyed aggregate, one anti-join for the
+    * deterministic), ancestor closure by pointer doubling (pairs unique
+    * by construction — a tree ancestor chain never repeats), ONE
+    * subtree-XOR keyed aggregate, one anti-join for the
     * non-tree set. Every frame is O(V·depth) or O(E); nothing is
     * quadratic. */
   def bridges(edges: DataFrame, src: String, dst: String,
@@ -1115,62 +1067,37 @@ object Graph {
       .distinct()
       .localCheckpoint()
     if (canon.isEmpty) return canon.select(col("a"), col("b"))
-    // Node-bounded frames (frontiers, levels, the per-node XOR values,
-    // jump/closure pieces) broadcast into the per-round joins when the
-    // driver-measured edge count is under the ceiling (r22, guide §2.4:
-    // the BFS expansion join and the settled anti-join run map-side,
-    // leaving one exchange per level — the distinct).
-    val canonN = canon.count()
-    val small = 2 * canonN <= iterBcastMaxRows(edges.sparkSession)
     val und = canon.union(canon.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
+    // Node-bounded frames (frontiers, levels, the per-node XOR values,
+    // jump/closure pieces) broadcast into the per-round joins when und's
+    // 2·|canon| rows are under the ceiling.
+    val loop = sized(und)
     val roots = Dedup.connectedComponents(canon, "a", "b")
       .filter(col("id") === col("component"))
       .select(col("id").as("node"))
-    // levels accumulates as a LAZY union of the per-round checkpointed
-    // frontiers (each leaf is an RDD scan): re-checkpointing the merged
-    // frame every round copied O(V) rows per round — O(V·depth²) total
-    // writes for identical content (r21, guide §2.4).
-    val levels0 = roots.withColumn("dist", lit(0)).localCheckpoint()
-    var levels = levels0
-    var frontierCkpts: List[DataFrame] = List(levels0)
-    var frontier = levels0
-    var rounds = 0
-    var n = frontier.count()
-    while (n > 0 && rounds < maxRounds) {
-      rounds += 1
-      val f = bcastIf(frontier.select(col("node")), small)
-      val next = compactIf(und.join(f, und("a") === f("node"))
-        .select(und("b").as("node")).distinct()
-        .join(bcastIf(levels.select(col("node")), small),
-          Seq("node"), "left_anti")
-        .withColumn("dist", lit(rounds)), small)
-        .localCheckpoint()
-      levels = levels.union(next)
-      frontierCkpts ::= next
-      frontier = next
-      n = next.count()
-    }
-    require(n == 0,
+    // canon is non-empty, so there is at least one root: the expansion
+    // starts from a non-empty frontier, as shortestPaths' does.
+    val (levels, frontiers, rounds) = expandLevels(und, loop,
+      loop.keep(roots.withColumn("dist", lit(0))), maxRounds)
+    require(rounds < maxRounds || frontiers.head.count() == 0,
       s"bridges: BFS frontier still non-empty after $maxRounds rounds")
     val la = levels.select(col("node").as("a"), col("dist").as("_da"))
     val lb = levels.select(col("node").as("b"), col("dist").as("_db"))
-    val parent = compactIf(und.join(bcastIf(la, small), Seq("a"))
-      .join(bcastIf(lb, small), Seq("b"))
+    val parent = loop.keep(und.join(loop.bc(la), Seq("a"))
+      .join(loop.bc(lb), Seq("b"))
       .filter(col("_db") === col("_da") - 1)
-      .groupBy(col("a").as("v")).agg(min(col("b")).as("par")), small)
-      .localCheckpoint()
-    // parent is materialized — und's last reader (r22 leak audit: und was
-    // never released and outlived the query in the block store).
-    Dedup.unpersistBlocks(und)
+      .groupBy(col("a").as("v")).agg(min(col("b")).as("par")))
+    // parent is materialized — und's last reader.
+    loop.release(und)
     val treeCanon = parent.select(least(col("v"), col("par")).as("a"),
       greatest(col("v"), col("par")).as("b"))
     val nonTree = canon.join(treeCanon, Seq("a", "b"), "left_anti")
       .withColumn("r",
         expr(CrossHash.h60Expr("concat(a, '|', b)")))
       .localCheckpoint()
-    // nonTree is materialized — canon's last reader (r22 leak audit).
-    Dedup.unpersistBlocks(canon)
+    // nonTree is materialized — canon's last reader.
+    loop.release(canon)
     val vals = nonTree.select(col("a").as("v"), col("r"))
       .union(nonTree.select(col("b").as("v"), col("r")))
       .groupBy(col("v")).agg(expr("bit_xor(r)").as("xv"))
@@ -1178,46 +1105,31 @@ object Graph {
     // distributed algorithm"): `closure` spans ancestor distances
     // [0, span), `jump` holds the exact span-distance ancestor where one
     // exists; one round composes both through `jump`, doubling the span —
-    // ⌈log₂(depth+1)⌉ joins instead of the previous one-parent-hop-per-
-    // round loop's `depth` joins (and `depth` re-checkpoints of the
-    // growing frame). A tree ancestor chain never repeats a node and each
-    // (v, ancestor) pair has a unique distance, so the distance-disjoint
-    // pieces union without dedup — the same uniqueness argument the
-    // one-hop form relied on, and the identical final pair set. r22: the
-    // closure accumulates as a lazy union of the checkpointed per-round
-    // SHIFTED pieces (the levels discipline above) — the r21 form
-    // re-checkpointed the whole merged closure every doubling round.
-    val closure0 = compactIf(
-      levels.select(col("node").as("v"), col("node").as("t")), small)
-      .localCheckpoint()
-    // closure0 and parent hold everything the BFS levels carried — the
-    // frontier checkpoints' last readers (r22 leak audit: every per-round
-    // frontier previously outlived the query in the block store).
-    frontierCkpts.foreach(Dedup.unpersistBlocks)
-    var closure = closure0
-    var jump = parent.select(col("v"), col("par").as("t")).localCheckpoint()
-    var span = 1
-    while (span <= rounds) {
-      val j = bcastIf(jump, small)
-      val shifted = compactIf(j
+    // ⌈log₂(depth+1)⌉ joins instead of one parent hop per round. A tree
+    // ancestor chain never repeats a node and each (v, ancestor) pair has a
+    // unique distance, so the distance-disjoint pieces union without dedup.
+    // The closure accumulates as a lazy union of the checkpointed per-round
+    // SHIFTED pieces (the levels discipline); jump is replaced per round.
+    var closure = loop.keep(levels.select(col("node").as("v"),
+      col("node").as("t")))
+    // closure and parent hold everything the BFS levels carried — the
+    // frontier checkpoints' last readers.
+    loop.release(frontiers: _*)
+    val doublings = Iterator.iterate(1)(_ * 2).takeWhile(_ <= rounds).size
+    val jump0 = loop.keep(parent.select(col("v"), col("par").as("t")))
+    val jump = loop.iterate(jump0, doublings) { (jump, _) =>
+      closure = closure.union(loop.keep(loop.bc(jump)
         .join(closure.select(col("v").as("t"), col("t").as("t2")), Seq("t"))
-        .select(col("v"), col("t2").as("t")), small)
-        .localCheckpoint()
-      val jump2 = compactIf(jump
-        .join(bcastIf(jump.select(col("v").as("t"), col("t").as("t2")),
-          small), Seq("t"))
-        .select(col("v"), col("t2").as("t")), small)
-        .localCheckpoint()
-      Dedup.unpersistBlocks(jump)
-      closure = closure.union(shifted)
-      jump = jump2
-      span *= 2
-    }
-    // The final jump frame is not part of the result (r22 leak audit).
-    Dedup.unpersistBlocks(jump)
-    val sub = closure.join(bcastIf(vals, small), Seq("v"))
+        .select(col("v"), col("t2").as("t"))))
+      jump.join(loop.bc(jump.select(col("v").as("t"), col("t").as("t2"))),
+          Seq("t"))
+        .select(col("v"), col("t2").as("t"))
+    }(_ => false)
+    // The final jump frame is not part of the result.
+    loop.release(jump)
+    val sub = closure.join(loop.bc(vals), Seq("v"))
       .groupBy(col("t")).agg(expr("bit_xor(xv)").as("sx"))
-    val sb = bcastIf(sub, small)
+    val sb = loop.bc(sub)
     parent.join(sb, parent("v") === sb("t"), "left")
       .filter(coalesce(col("sx"), lit(0L)) === 0L)
       .select(least(col("v"), col("par")).as("a"),

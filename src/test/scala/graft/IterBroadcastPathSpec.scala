@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph}
 
@@ -61,6 +64,70 @@ class IterBroadcastPathSpec extends SparkSpec {
       assert(big(k) == v, s"$k: shuffle-path result diverged from broadcast path")
     // and the graph answers are sane, not vacuously-equal empties
     assert(small("bfs").size == 5 && small("bridges").nonEmpty)
+  }
+
+  // Every operator that runs through Graph's round loop, on `edges`.
+  private def roundLoopOps: Seq[(String, () => DataFrame)] = Seq(
+    "pageRank" -> (() => Graph.pageRank(edges, "s", "d", iters = 3)),
+    "ppr" -> (() => Graph.personalizedPageRank(edges, "s", "d", Seq("a"))),
+    "bfs" -> (() => Graph.shortestPaths(edges, "s", "d", "a", maxDepth = 6)),
+    "kcore" -> (() => Graph.kCore(edges, "s", "d", k = 2)),
+    "lpa" -> (() => Graph.labelPropagation(edges, "s", "d")),
+    "hits" -> (() => Graph.hits(edges, "s", "d")),
+    "ktruss" -> (() => Graph.kTruss(edges, "s", "d", k = 3)),
+    "bridges" -> (() => Graph.bridges(edges, "s", "d")),
+    "sssp" -> (() => Graph.sssp(
+      edges.withColumn("w", lit(2L)), "s", "d", "w", "a")),
+    "cc" -> (() => Dedup.connectedComponents(edges, "s", "d",
+      maxDriverEdges = 0)))
+
+  /** Builds `f`'s result, collects it and releases it the way Bench does;
+    * returns the Spark jobs that took and the RDDs it left persisted. */
+  private def runReleased(f: () => DataFrame): (Int, Set[Int]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      val df = f()
+      df.collect()
+      Dedup.unpersistBlocks(df)
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  // Jobs per operator on `edges` as (default ceiling, ceiling 0); AQE runs
+  // each shuffle map stage as a job of its own, so a count() is two. A
+  // round structure change that adds a job fails here; a removed job must
+  // be one whose answer the output cannot depend on.
+  private val PinnedJobs = Map(
+    "pageRank" -> (21, 21), "ppr" -> (25, 25), "bfs" -> (22, 22),
+    "kcore" -> (22, 22), "lpa" -> (20, 20), "hits" -> (37, 37),
+    "ktruss" -> (16, 17), "bridges" -> (49, 66), "sssp" -> (30, 30),
+    "cc" -> (28, 28))
+
+  test("round-loop operators run a pinned number of Spark jobs on both legs") {
+    def jobs(): Map[String, Int] =
+      roundLoopOps.map { case (k, f) => k -> runReleased(f)._1 }.toMap
+    val small = jobs()
+    val big = withCeiling(0L)(jobs())
+    val got = small.map { case (k, n) => k -> (n, big(k)) }
+    assert(got == PinnedJobs, s"job counts (default, ceiling 0): $got")
+  }
+
+  test("round-loop operators and q54/q214 leave no persisted RDD after release") {
+    val runs = roundLoopOps ++ Seq(
+      "q54_neardup_components", "q214_canonical_pick").map(q =>
+      q -> (() => SparkEntry.queries(q)(spark, sf0001)))
+    val leaks = runs.map { case (k, f) => k -> runReleased(f)._2.size }
+      .filter(_._2 > 0)
+    assert(leaks.isEmpty, s"persisted RDDs left after release: $leaks")
   }
 
   test("setSimilarityJoin match-count filter never drops a true pair (brute-force check)") {
