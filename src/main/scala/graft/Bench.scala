@@ -299,14 +299,14 @@ object Bench {
         } else first
       System.err.println(f"[bench] $name%-28s ${samples.map(s => f"$s%7.2fs").mkString(" ")}")
       // Streaming queries drain into uniquely-named memory-sink temp views
-      // (graft_stream_*); each sample registers a new one that would
-      // otherwise hold its drained rows for the rest of the session —
+      // (StreamingQueries.SinkPrefix); each sample registers a new one that
+      // would otherwise hold its drained rows for the rest of the session —
       // the same blocks-accumulate mechanism as the checkpoint release
       // above, via the catalog instead of the block manager. The timed
       // writes are done (results re-sorted later from `samples`), so
       // dropping here is safe and untimed.
       spark.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith("graft_stream")).foreach { v =>
+        .filter(_.startsWith(graft.streaming.StreamingQueries.SinkPrefix)).foreach { v =>
           spark.catalog.dropTempView(v): Unit
         }
       // Stateful streaming queries leave their StateStoreProviders (HDFS

@@ -46,7 +46,7 @@ object Tables {
   }
 
   /** Content fingerprint of a fixture table path, for content-addressed
-    * staging (q216's evolve dir, chunkedStreamDir, binaryStageDir):
+    * staging (q216's evolve dir, StreamingQueries.stagingDir, binaryStageDir):
     * returns (totalBytes, md5hex). The driver's testdata ships each table
     * as a SINGLE parquet file, but a Spark-written copy — e.g. the 10×
     * scale tier (tools/ScaleTier.scala) — is a DIRECTORY of part files.

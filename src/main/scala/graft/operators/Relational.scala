@@ -1093,7 +1093,7 @@ object Relational {
     * as NULL for the old files — certified by rolling the unified frame
     * up by `coalesce(priority, '<missing>')` against an oracle that
     * replays the producer split from the original table. Staging is
-    * content-addressed off the fixture (chunkedStreamDir's discipline).
+    * content-addressed off the fixture (StreamingQueries.stagingDir's discipline).
     *
     * Scale: schema merge is a FOOTER operation (one task per file reads
     * kilobytes); the data path is an ordinary pruned columnar scan. */

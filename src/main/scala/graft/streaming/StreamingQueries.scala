@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import graft.Tables
 
 /** Structured-Streaming layer over the `events` table (SURVEY §2.2 streaming
@@ -25,13 +27,220 @@ import graft.Tables
 object StreamingQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  // ------------------------------------------------------------- plumbing
+
+  /** Prefix of every memory sink this layer names. A long-lived session
+    * (Bench) drops the temp views with this prefix after each query, or the
+    * drained rows would stay in the catalog for the rest of the session. */
+  private[graft] final val SinkPrefix = "graft_stream"
+
+  /** Start `w`, run every micro-batch that is available and always stop the
+    * query, also when a batch fails (the failure then surfaces here). */
+  private def drain(w: DataStreamWriter[_]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Drain `df` into a memory sink and return the drained table. The drain
+    * discipline every memory-sink query of this layer follows:
+    *  - The sink is named `graft_stream_<nanos>` ([[SinkPrefix]]), the prefix
+    *    Bench drops after each sample.
+    *  - The state width is 4. A stateful query fixes its state partition
+    *    count at start from `spark.sql.shuffle.partitions`, and every state
+    *    partition pays a store open/commit per micro-batch whatever it
+    *    holds, so the width is sized to the keyed state volume, not to the
+    *    session's batch-shuffle width. On a cluster the same knob is sized
+    *    upward for state throughput.
+    *  - Confs, this one and any a caller sets with [[withConf]] around the
+    *    drain, are restored only after the drain returns: the query is
+    *    planned on the stream thread at its first trigger, not in `start()`.
+    */
+  private[graft] def drainToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+    val s = df.sparkSession
+    val name = s"${SinkPrefix}_${System.nanoTime()}"
+    withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+      drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    }
+    s.table(name)
+  }
+
+  /** Set each conf, run `body`, then restore each conf, or unset it if it
+    * was not set before. */
+  private[graft] def withConf[T](s: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Poll `q` until `done` holds. If the query terminates first, rethrow its
+    * failure; if 120 s pass, throw — never hang the caller. */
+  private[graft] def awaitUntil(q: StreamingQuery)(done: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    while (!done) {
+      if (!q.isActive)
+        throw q.exception.getOrElse(
+          new IllegalStateException(s"stream ${q.name} terminated before its condition held"))
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException(s"stream ${q.name} still waiting after 120 s")
+      Thread.sleep(50)
+    }
+  }
+
+  /** A directory under java.io.tmpdir for staged copies or links of fixture
+    * `table` in `d`, named by `prefix`, `d`, `key` and the fixture's
+    * (size, md5) fingerprint. Content addressing means a regenerated
+    * fixture is never served stale chunks or dangling links, also when it
+    * was restored with a preserved mtime; fixtureFingerprint also handles
+    * directory-shaped fixtures (the Spark-written 10x scale tier). */
+  private def stagingDir(d: String, table: String, prefix: String,
+      key: String): Path = {
+    val (size, md5hex) = Tables.fixtureFingerprint(Paths.get(d, s"$table.parquet"))
+    val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
+    Paths.get(sys.props("java.io.tmpdir"),
+      s"$prefix$safe${key}_${size}_${md5hex.take(16)}")
+  }
+
+  /** A file stream over fixture `table`, with its batch schema, from the
+    * [[streamDir]] staging. */
+  private def tableStream(s: SparkSession, d: String, table: String): DataFrame =
+    s.readStream.schema(Tables.load(s, d, table).schema).parquet(streamDir(d, table))
+
+  /** Schema-adaptive streaming source over the `events` fixture: the
+    * [[tableStream]], then the same `ts`-normalization branch as the batch
+    * loader ([[Tables.normalizeEventsTs]] — long nanos → µs, NTZ →
+    * session-UTC TIMESTAMP, native µs pass-through). Every streaming query
+    * over the single-file events source routes through here so a
+    * fixture-encoding change is handled in exactly one place. */
+  private def eventsStream(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.normalizeEventsTs(tableStream(s, d, "events"))
+  }
+
+  /** Chunk files [[rangeChunks]] stages: the chunked sources replay the
+    * events table as this many micro-batches. */
+  private val Chunks = 4
+
+  /** Stage the events table as [[Chunks]] parquet files range-partitioned on
+    * `column` (`event_id` or `ts`). part-0000k holds the k-th range
+    * (repartitionByRange assigns ranges in partition order), and mtimes are
+    * pinned strictly increasing in that order, so the file source, which
+    * orders by modification time, replays the ranges in order even where a
+    * filesystem ties timestamps.
+    *  - `ts` chunks replay the stream in event-time order, the monotone
+    *    replay a real event stream has, which watermark-gated queries need
+    *    (append-mode finalization, update mode, timeout sessions).
+    *  - `event_id` chunks interleave time: the fixture for order-INSENSITIVE
+    *    state (dedup, upsert, complete-mode windows). Under a watermark that
+    *    interleaving would make batch 1 advance the watermark to near-final
+    *    and batches 2..n arrive almost entirely late.
+    * The staging is a materialized COPY, so its dir is content-addressed
+    * ([[stagingDir]]). `mode=overwrite` clears a half-staged dir from an
+    * earlier crash (marker absent ⇒ never served); the marker lands only
+    * after the write and the mtimes. */
+  private[graft] def rangeChunks(s: SparkSession, d: String, column: String): String = {
+    import scala.jdk.CollectionConverters._
+    val dir = stagingDir(d, "events", "graft_chunks_", s"${column}_$Chunks")
+    val marker = dir.resolve("_STAGED")
+    if (!Files.exists(marker)) {
+      Tables.events(s, d)
+        .repartitionByRange(Chunks, col(column))
+        .write.mode("overwrite").parquet(dir.toString)
+      val stream = Files.list(dir)
+      val parts =
+        try stream.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("part-")).toSeq
+          .sortBy(_.getFileName.toString)
+        finally stream.close()
+      val base = System.currentTimeMillis()
+      parts.zipWithIndex.foreach { case (p, i) =>
+        Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
+      }
+      Files.write(marker, Array.emptyByteArray)
+    }
+    dir.toString
+  }
+
+  /** The [[rangeChunks]] staging on `column` as a file stream that reads one
+    * chunk per trigger. The chunks hold the already-normalized
+    * `Tables.events` output, so `ts` is a TIMESTAMP the stream can
+    * watermark directly. */
+  private[graft] def chunkedSource(s: SparkSession, d: String, column: String): DataFrame = {
+    val stage = rangeChunks(s, d, column)
+    s.readStream.schema(s.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+  }
+
+  /** Rows and value total per (`windowCol`, event_type) — the windowed
+    * aggregate of the tumbling and sliding queries, batch or streaming. */
+  private def windowTotals(df: DataFrame, windowCol: Column): DataFrame =
+    df.groupBy(windowCol.as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
+      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
+
+  /** [[windowTotals]] of a stream over 1-hour tumbling windows, with the
+    * watermark 1 hour behind the latest event time. */
+  private def tumblingTotals(stream: DataFrame): DataFrame =
+    windowTotals(stream.withWatermark("ts", "1 hour"), window(col("ts"), "1 hour"))
+
+  /** "Purchase within one hour after the click", joined per user as `how`
+    * — the interval join of q86/q195/q252/q262/q279, which
+    * StreamOuterJoinSpec drives on MemoryStream sides. */
+  private[graft] def intervalJoin(clicks: DataFrame, purchases: DataFrame,
+      how: String): DataFrame =
+    clicks.join(purchases, expr(
+      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"), how)
+
+  /** The events stream's clicks joined to its purchases as `how`: one
+    * streaming source with two filter branches (a streaming self-join: the
+    * engine still keys two state stores, but source listing and scan
+    * bookkeeping are not duplicated per branch), each watermarked 1 hour. */
+  private def clickPurchaseJoin(s: SparkSession, d: String, how: String): DataFrame = {
+    val src = eventsStream(s, d)
+    val clicks = src.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("click_ts", "1 hour")
+    val purchases = src.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
+      .withWatermark("p_ts", "1 hour")
+    intervalJoin(clicks, purchases, how)
+  }
+
+  /** One foreachBatch fold step of in-session state: `combine` the previous
+    * state (an empty placeholder of `add`'s schema on the first batch) with
+    * `add`, then materialize with an eager `localCheckpoint`. Materializing
+    * BEFORE the micro-batch ends matters (its frame is not re-executable
+    * later), and it caps the state lineage at O(1) per batch. The superseded
+    * state's checkpoint blocks are dead once the new state materializes, so
+    * they are released now instead of waiting for GC + ContextCleaner:
+    * otherwise every batch of every sample leaves a full state copy in the
+    * block store, the creeping memory pressure that surfaced as the r11
+    * q141–q145 positional elevation (q143 7.1 s in-session vs 1.2 s solo).
+    * Only a real superseded checkpoint is released; the placeholder has no
+    * blocks. The placeholder lives in `s`, not in the batch's stream
+    * session, so the state and everything derived from it after the drain
+    * plan in `s`. */
+  private def foldStep(s: SparkSession, prev: DataFrame, add: DataFrame)(
+      combine: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val base = if (prev != null) prev
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row], add.schema)
+    val next = combine(base, add).localCheckpoint(true)
+    if (prev != null) graft.operators.Dedup.unpersistBlocks(prev)
+    next
+  }
+
+  // -------------------------------------------------------------- queries
+
   /** Tumbling 1-hour windows per event_type (batch execution of the
     * streaming-shaped plan). */
   private val q80: Q = (s, d) =>
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
+    windowTotals(Tables.events(s, d), window(col("ts"), "1 hour"))
       .orderBy(col("window_start"), col("event_type"))
 
   /** Gap-based sessionization (30-min inactivity) per user via
@@ -45,43 +254,19 @@ object StreamingQueries {
       .orderBy(col("user_id"), col("session_start"))
 
   /** The q80 aggregation executed by the *streaming* engine: file-source
-    * readStream over the same parquet, complete-mode memory sink, drained
-    * synchronously. Oracle = identical SQL to q80. */
-  private val q82: Q = (s, d) => {
-    val raw = eventsStream(s, d)
-    val agg = raw
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
-    val name = s"graft_stream_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("window_start"), col("event_type"))
-  }
+    * readStream over the same parquet, complete-mode memory sink
+    * ([[drainToMemory]]). Oracle = identical SQL to q80. */
+  private val q82: Q = (s, d) =>
+    drainToMemory(tumblingTotals(eventsStream(s, d)), OutputMode.Complete())
+      .orderBy(col("window_start"), col("event_type"))
 
   /** The q83 sliding-window aggregation executed by the *streaming* engine
-    * (same drain pattern as [[q82]]): every event expands into two
-    * overlapping 2-hour windows under micro-batch execution; oracle =
-    * identical SQL to q83. */
-  private val q85: Q = (s, d) => {
-    val raw = eventsStream(s, d)
-    val agg = raw
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
-    val name = s"graft_stream_slide_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("window_start"), col("event_type"))
-  }
+    * ([[drainToMemory]]): every event expands into two overlapping 2-hour
+    * windows under micro-batch execution; oracle = identical SQL to q83. */
+  private val q85: Q = (s, d) =>
+    drainToMemory(windowTotals(eventsStream(s, d).withWatermark("ts", "1 hour"),
+      window(col("ts"), "2 hours", "1 hour")), OutputMode.Complete())
+      .orderBy(col("window_start"), col("event_type"))
 
   /** APPEND-mode watermarked tumbling aggregation — the production output
     * mode for unbounded dashboards, and the missing half of q82 (complete
@@ -101,25 +286,9 @@ object StreamingQueries {
     * Scale: state is bounded by the windows inside the watermark horizon
     * (window × key), the bound complete mode loses — this is the form
     * that holds on an unbounded 100 TB stream. */
-  private val q191: Q = (s, d) => {
-    val stage = timeChunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val agg = src
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
-    val name = s"graft_stream_append_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("window_start"), col("event_type"))
-  }
+  private val q191: Q = (s, d) =>
+    drainToMemory(tumblingTotals(chunkedSource(s, d, "ts")), OutputMode.Append())
+      .orderBy(col("window_start"), col("event_type"))
 
   /** UPDATE-mode watermarked tumbling aggregation (round 19, VERDICT r18
     * item 5) — the third output mode under the oracle discipline
@@ -145,28 +314,11 @@ object StreamingQueries {
     * sink sees O(changes) rows instead of O(windows × triggers)
     * (complete mode's cost) — the only mode fit for a 100 TB upsert
     * dashboard feed. */
-  private val q268: Q = (s, d) => {
-    val stage = timeChunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val agg = src
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
-    val name = s"graft_stream_update_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  private val q268: Q = (s, d) =>
+    drainToMemory(tumblingTotals(chunkedSource(s, d, "ts")), OutputMode.Update())
       .groupBy(col("window_start"), col("event_type"))
       .agg(max(col("n")).as("n"), max_by(col("total"), col("n")).as("total"))
       .orderBy(col("window_start"), col("event_type"))
-  }
 
   /** Stream-stream inner join under the REAL streaming runtime: clicks and
     * purchases (two watermarked readStream branches over the same source)
@@ -176,31 +328,11 @@ object StreamingQueries {
     * interval — the property that makes stream-stream joins feasible at all
     * at scale (unbounded state otherwise). The drained pair stream is rolled
     * up per user in batch; oracle = the identical interval join in DuckDB. */
-  private val q86: Q = (s, d) => {
-    // ONE streaming source, two filter branches (a streaming self-join):
-    // the engine still keys two state stores, but source listing/scan
-    // bookkeeping isn't duplicated per branch.
-    val src = eventsStream(s, d)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"))
-    val name = s"graft_stream_join_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  private val q86: Q = (s, d) =>
+    drainToMemory(clickPurchaseJoin(s, d, "inner"), OutputMode.Append())
       .groupBy(col("c_uid").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"), round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("user_id"))
-  }
 
   /** The q82 tumbling aggregation executed on the ROCKSDB state store —
     * the production state backend for large state (billions of keys spill
@@ -210,30 +342,11 @@ object StreamingQueries {
     * Identical plan and oracle to q82 — the gate certifies backend
     * equivalence: swapping the provider config changes WHERE state lives,
     * never what the query computes. */
-  private val q205: Q = (s, d) => {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val agg = eventsStream(s, d)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .select(col("w.start").as("window_start"), col("event_type"),
-          col("n"), col("total"))
-      val name = s"graft_stream_rocksdb_${System.nanoTime()}"
-      withStatePartitions(s, 4) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(name).orderBy(col("window_start"), col("event_type"))
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private val q205: Q = (s, d) =>
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      drainToMemory(tumblingTotals(eventsStream(s, d)), OutputMode.Complete())
+    }.orderBy(col("window_start"), col("event_type"))
 
   /** Stream-stream LEFT OUTER interval join — the production funnel shape
     * q86's inner join cannot express: "every click, with its conversions
@@ -258,32 +371,14 @@ object StreamingQueries {
     * state BOUNDED (evictable) on an unbounded stream — each side holds
     * only rows inside the watermark horizon, the property that lets this
     * run forever on a 100 TB/day event feed. */
-  private val q195: Q = (s, d) => {
-    val src = eventsStream(s, d)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_outer")
-    val name = s"graft_stream_louter_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  private val q195: Q = (s, d) =>
+    drainToMemory(clickPurchaseJoin(s, d, "left_outer"), OutputMode.Append())
       .groupBy(col("c_uid").as("user_id"))
       .agg(count(lit(1)).as("n_rows"),
         count(col("p_uid")).as("n_matched"),
         (count(lit(1)) - count(col("p_uid"))).as("n_unmatched"),
         round(sum(coalesce(col("value"), lit(0.0))), 2).as("total_value"))
       .orderBy(col("user_id"))
-  }
 
   /** Stream-stream LEFT ANTI interval join (round 19) — the FIFTH and
     * final mode of the interval-join matrix (inner q86, left outer
@@ -302,14 +397,6 @@ object StreamingQueries {
     * clicks whose proof window is still open at drain end are withheld
     * by BOTH engines (q191's trailing-edge rule). */
   private val q279: Q = (s, d) => {
-    val src = eventsStream(s, d)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 hour")
     // The null filter rides INSIDE the streaming plan (r21, guide §2.3
     // "project early"): matched pairs — the bulk of the outer join's
     // emissions — are dropped in-flight instead of being materialized
@@ -317,18 +404,10 @@ object StreamingQueries {
     // untouched (a null-extension still fires exactly when the watermark
     // closes the click's interval), so the drained rows are byte-for-byte
     // the rows the post-drain filter kept before.
-    val joined = clicks.join(purchases, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_outer")
+    val unmatched = clickPurchaseJoin(s, d, "left_outer")
       .filter(col("p_uid").isNull)
       .select(col("c_uid"), col("click_id"))
-    val name = s"graft_stream_anti_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drainToMemory(unmatched, OutputMode.Append())
       .select(col("c_uid").as("user_id"), col("click_id"))
       .orderBy(col("user_id"), col("click_id"))
   }
@@ -357,25 +436,8 @@ object StreamingQueries {
     * bound + watermarks let both state stores evict, so the join runs
     * forever on an unbounded feed; the drained roll-up is user-keyed and
     * channels-bounded per user. */
-  private val q252: Q = (s, d) => {
-    val src = eventsStream(s, d)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "full_outer")
-    val name = s"graft_stream_fouter_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  private val q252: Q = (s, d) =>
+    drainToMemory(clickPurchaseJoin(s, d, "full_outer"), OutputMode.Append())
       .groupBy(coalesce(col("c_uid"), col("p_uid")).as("user_id"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("click_id").isNotNull && col("p_uid").isNotNull, 1L)
@@ -385,7 +447,6 @@ object StreamingQueries {
           .as("n_purchase_only"),
         round(sum(coalesce(col("value"), lit(0.0))), 2).as("total_value"))
       .orderBy(col("user_id"))
-  }
 
   /** Stream-stream LEFT SEMI interval join (round 18) — the fourth and
     * last production mode of the interval-join matrix (q86 inner, q195
@@ -400,29 +461,11 @@ object StreamingQueries {
     * The oracle is the batch EXISTS formulation over the same interval
     * — agreement certifies exactly-once-per-click emission (any
     * double-emit inflates n_converted_clicks). */
-  private val q262: Q = (s, d) => {
-    val src = eventsStream(s, d)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_semi")
-    val name = s"graft_stream_semi_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  private val q262: Q = (s, d) =>
+    drainToMemory(clickPurchaseJoin(s, d, "left_semi"), OutputMode.Append())
       .groupBy(col("c_uid").as("user_id"))
       .agg(count(lit(1)).as("n_converted_clicks"))
       .orderBy(col("user_id"))
-  }
 
   /** Restart-safe checkpointed streaming parquet sink — the durability
     * contract every production pipeline (and none of the other streaming
@@ -447,41 +490,28 @@ object StreamingQueries {
     * one compact JSON per batch. This is the unbounded-retention shape —
     * nothing in the recovery path ever rereads history. */
   private val q199: Q = (s, d) => {
-    import java.nio.file.{Files, Paths}
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = Paths.get(stage).getFileName.toString.takeRight(20)
-    val root = Paths.get(sys.props("java.io.tmpdir"), s"graft_ckpt_sink_$safe$fp")
+    // Keyed like the chunk staging it reads: the checkpoint's offset log
+    // names those chunk files.
+    val root = stagingDir(d, "events", "graft_ckpt_sink_", s"event_id_$Chunks")
     val outDir = root.resolve("out"); val ckpt = root.resolve("ckpt")
     val marker = root.resolve("_DONE")
     if (!Files.exists(marker)) {
       org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
       Files.createDirectories(root)
-      def start() = {
-        // chunkedStreamDir stages the already-normalized Tables.events
-        // output, so the stream reads its schema as-is (q191's pattern).
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        src.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("value"))
-          .writeStream.outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-      }
+      def sink() = chunkedSource(s, d, "event_id")
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+        .writeStream.outputMode(OutputMode.Append())
+        .format("parquet")
+        .option("path", outDir.toString)
+        .option("checkpointLocation", ckpt.toString)
       // Run 1: stop after the first committed micro-batch — mid-stream.
-      val q1 = start()
-      try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        while (q1.recentProgress.count(_.numInputRows > 0) < 1 &&
-               System.nanoTime() < deadline) Thread.sleep(50)
-      } finally q1.stop()
+      val q1 = sink().start()
+      try awaitUntil(q1)(q1.recentProgress.exists(_.numInputRows > 0))
+      finally q1.stop()
       // Run 2: same checkpoint — resumes from the committed offsets and
       // drains the remaining batches.
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
+      drain(sink())
       Files.write(marker, Array.emptyByteArray)
     }
     s.read.parquet(outDir.toString)
@@ -490,42 +520,21 @@ object StreamingQueries {
       .orderBy(col("user_id"))
   }
 
-  /** A stateful streaming query's state partition count is fixed at query
-    * start from `spark.sql.shuffle.partitions`, and EVERY state partition
-    * pays a store open/commit per micro-batch regardless of content — so
-    * it must be sized to the keyed state volume, not to the session's
-    * batch-shuffle width. On a real cluster the same knob is sized upward
-    * for state throughput. Planning happens on the stream thread at the
-    * first trigger, so the conf is restored only after `body` (which must
-    * drain the stream) completes. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Spark's streaming file source requires a *directory* of data FILES;
     * the gate fixtures are single parquet files and the scale-tier
     * fixtures are Spark-written DIRECTORIES of part files. Stage a
-    * per-table symlink dir under java.io.tmpdir that handles BOTH shapes
-    * (round 20, VERDICT r19 item 1: the previous single-symlink form
-    * linked a directory fixture as one entry, which FileStreamSource's
-    * listing resolves to ZERO files — every eventsStream-routed tier row
-    * measured an empty drain). A file fixture stages as one symlink; a
-    * directory fixture stages one symlink PER part file (still no copy).
-    * The staging dir is content-addressed by the fixture's (size, md5)
-    * fingerprint — the chunkedStreamDir discipline — so a regenerated
-    * fixture can never be served stale or dangling links, and a marker
-    * file makes the staging idempotent and crash-safe. */
+    * per-table symlink dir that handles BOTH shapes (round 20, VERDICT r19
+    * item 1: the previous single-symlink form linked a directory fixture
+    * as one entry, which FileStreamSource's listing resolves to ZERO
+    * files — every eventsStream-routed tier row measured an empty drain).
+    * A file fixture stages as one symlink; a directory fixture stages one
+    * symlink PER part file (still no copy). The staging dir is
+    * content-addressed ([[stagingDir]]) and a marker file makes the
+    * staging idempotent and crash-safe. */
   private[graft] def streamDir(d: String, table: String): String = {
-    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
     val src = Paths.get(d, s"$table.parquet")
-    val (srcSize, md5hex) = Tables.fixtureFingerprint(src)
-    val fp = s"${srcSize}_${md5hex.take(16)}"
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_$safe${table}_$fp")
+    val dir = stagingDir(d, table, "graft_stream_", table)
     val marker = dir.resolve("_STAGED")
     if (!Files.exists(marker)) {
       Files.createDirectories(dir)
@@ -558,20 +567,6 @@ object StreamingQueries {
     dir.toString
   }
 
-  /** Schema-adaptive streaming source over the `events` fixture: readStream
-    * with the on-disk schema, then the same `ts`-normalization branch as the
-    * batch loader ([[Tables.normalizeEventsTs]] — long nanos → µs, NTZ →
-    * session-UTC TIMESTAMP, native µs pass-through). Every streaming events
-    * query routes through here so a fixture-encoding change is handled in
-    * exactly one place. */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeEventsTs(
-      s.readStream
-        .schema(Tables.load(s, d, "events").schema)
-        .parquet(streamDir(d, "events")))
-  }
-
   /** Sliding 2-hour windows every hour per event_type: each event lands in
     * two windows (Expand in the plan); oracle enumerates both buckets. */
   private val q83: Q = (s, d) =>
@@ -600,94 +595,6 @@ object StreamingQueries {
       .orderBy(col("user_id"), col("hour"))
   }
 
-  /** Stage the events table as N deterministic parquet chunk files so the
-    * file source replays it as N micro-batches (`maxFilesPerTrigger=1`).
-    * Chunk membership is `event_id`-range-based; the downstream merge is
-    * order- and split-insensitive, so the final state never depends on
-    * file arrival order. Idempotent per (sfDir, n). */
-  private[graft] def chunkedStreamDir(s: SparkSession, d: String, n: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // Unlike streamDir's live symlink, this stages a materialized COPY — so
-    // the cache key must be CONTENT-ADDRESSED ((size, md5) of the fixture,
-    // the binaryStageDir discipline): (size, mtime) alone would keep
-    // serving stale chunks for a regenerated fixture restored with a
-    // preserved mtime. Hashing is a bounded driver read of the fixture;
-    // fixtureFingerprint also handles directory-shaped fixtures (the
-    // Spark-written 10× scale tier) that a raw readAllBytes rejects.
-    val (srcSize, md5hex) = Tables.fixtureFingerprint(Paths.get(d, "events.parquet"))
-    val fp = s"${srcSize}_${md5hex.take(16)}"
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_chunks_$safe${n}_$fp")
-    val marker = dir.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      // mode=overwrite clears any half-staged dir from a previous crash
-      // (marker absent ⇒ never served); the marker lands only after the
-      // write completes, and a new fingerprint is a new directory.
-      Tables.events(s, d)
-        .repartitionByRange(n, col("event_id"))
-        .write.mode("overwrite").parquet(dir.toString)
-      Files.write(marker, Array.emptyByteArray)
-    }
-    dir.toString
-  }
-
-  /** [[chunkedStreamDir]]'s TIME-ORDERED sibling for watermark-gated
-    * queries: chunks are `ts`-range-partitioned and their mtimes are set
-    * strictly increasing in range order, so the file source (which orders
-    * by modification time) replays the stream in event-time order. The
-    * event_id-ranged stager is the right fixture for order-INSENSITIVE
-    * state (dedup, upsert, complete-mode windows) precisely because its
-    * chunks interleave time — but under a watermark that interleaving
-    * makes batch 1 advance the watermark to near-final and batches 2..n
-    * arrive almost entirely LATE (dropped). Append-mode finalization
-    * (q191) needs the monotone replay a real event stream has. */
-  private[graft] def timeChunkedStreamDir(s: SparkSession, d: String,
-      n: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val safe = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val (srcSize, md5hex) = Tables.fixtureFingerprint(Paths.get(d, "events.parquet"))
-    val fp = s"${srcSize}_${md5hex.take(16)}"
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_tchunks_$safe${n}_$fp")
-    val marker = dir.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Tables.events(s, d)
-        .repartitionByRange(n, col("ts"))
-        .write.mode("overwrite").parquet(dir.toString)
-      // part-0000k holds the k-th ts range (repartitionByRange assigns
-      // ranges in partition order); pin mtimes strictly increasing in
-      // that order so FileStreamSource's mod-time sort replays them
-      // chronologically even where a filesystem ties timestamps.
-      val stream = Files.list(dir)
-      val sorted =
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(stream.iterator())
-          .asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
-          .sortBy(_.getFileName.toString)
-        finally stream.close()
-      val base = System.currentTimeMillis()
-      sorted.zipWithIndex.foreach { case (p, i) =>
-        Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-      }
-      Files.write(marker, Array.emptyByteArray)
-    }
-    dir.toString
-  }
-
-  /** Streaming CDC upsert — an incrementally-maintained latest-wins view
-    * (the foreachBatch MERGE pattern a lakehouse streaming sink compacts
-    * to): the events table replays as 4 micro-batches; each batch folds
-    * into locally-checkpointed in-session state via
-    * [[graft.operators.Analytics.mergeLatest]] (state ∪ batch →
-    * row_number=1 per key). `localCheckpoint` is explicitly NOT
-    * fault-tolerant and the stream runs without a checkpointLocation —
-    * this query certifies the merge semantics (split-insensitivity), not
-    * crash recovery; durability would need a real sink plus a
-    * checkpointLocation. State stays bounded by the
-    * number of distinct keys — per-batch cost is one merge of
-    * (state + batch), never a reread of the stream. The final view must
-    * equal batch latest-wins over the whole table (the merge is
-    * split-insensitive under a total version order), which the oracle
-    * replays. */
   /** Stream–static enrichment join under the real micro-batch engine: the
     * purchase stream joins the customer dimension (broadcast — the static
     * side ships to tasks, never shuffles the stream) and rolls revenue up
@@ -706,18 +613,12 @@ object StreamingQueries {
       .join(cust, purchases("user_id") === cust("c_custkey"))
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("revenue"))
-    val name = s"graft_stream_enrich_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("c_nationkey"))
+    drainToMemory(agg, OutputMode.Complete()).orderBy(col("c_nationkey"))
   }
 
   /** The q81 session aggregation executed by the STREAMING engine — the
     * missing member of the streaming window matrix (tumbling q82, sliding
-    * q85, session q151). Complete output mode, q82's drain pattern: the
+    * q85, session q151). Complete output mode ([[drainToMemory]]): the
     * session-window state merges within-gap events per user across
     * micro-batches — including SESSION MERGES, where an event arriving in
     * a later chunk bridges two previously-separate open sessions (the
@@ -730,22 +631,13 @@ object StreamingQueries {
     * production form pairs `withWatermark` with append mode and emits
     * each session once its close time passes the watermark. */
   private val q151: Q = (s, d) => {
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val agg = src
+    val agg = chunkedSource(s, d, "event_id")
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("n_events"), col("total_value"))
-    val name = s"graft_stream_session_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("user_id"), col("session_start"))
+    drainToMemory(agg, OutputMode.Complete())
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** Streaming exact dedup under the REAL micro-batch engine: the events
@@ -760,19 +652,11 @@ object StreamingQueries {
     * `dropDuplicatesWithinWatermark` variant caps state by event time —
     * the StreamingDedupSpec watermark contract). */
   private val q144: Q = (s, d) => {
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val deduped = src.select(col("user_id"), col("event_type"))
+    val deduped = chunkedSource(s, d, "event_id")
+      .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    val name = s"graft_stream_dedup_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = deduped.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("user_id"), col("event_type"))
+    drainToMemory(deduped, OutputMode.Append())
+      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** TTL'd streaming dedup — q144's unbounded-key form. Plain
@@ -788,60 +672,42 @@ object StreamingQueries {
     * bounded-state row count are pinned by StreamingDedupSpec's controlled
     * MemoryStream contract, where the watermark can be driven precisely. */
   private val q148: Q = (s, d) => {
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    // Chunks are staged from Tables.events, so `ts` is already a normalized
-    // TIMESTAMP — eligible as the watermark column directly.
-    val deduped = src
+    val deduped = chunkedSource(s, d, "event_id")
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    val name = s"graft_stream_dedup_ttl_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = deduped.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("user_id"), col("event_type"))
+    drainToMemory(deduped, OutputMode.Append())
+      .orderBy(col("user_id"), col("event_type"))
   }
 
+  /** Streaming CDC upsert — an incrementally-maintained latest-wins view
+    * (the foreachBatch MERGE pattern a lakehouse streaming sink compacts
+    * to): the events table replays as 4 micro-batches; each batch folds
+    * into locally-checkpointed in-session state ([[foldStep]]) via
+    * [[graft.operators.Analytics.mergeLatest]] (state ∪ batch →
+    * row_number=1 per key). `localCheckpoint` is explicitly NOT
+    * fault-tolerant and the stream runs without a checkpointLocation —
+    * this query certifies the merge semantics (split-insensitivity), not
+    * crash recovery; durability would need a real sink plus a
+    * checkpointLocation. State stays bounded by the
+    * number of distinct keys — per-batch cost is one merge of
+    * (state + batch), never a reread of the stream. The final view must
+    * equal batch latest-wins over the whole table (the merge is
+    * split-insensitive under a total version order), which the oracle
+    * replays. */
   private val q87: Q = (s, d) => {
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
+    val raw = chunkedSource(s, d, "event_id")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
         col("value"))
     var state: DataFrame = null
-    val q = raw.writeStream.outputMode(OutputMode.Append())
+    drain(raw.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val prev = state
-        val base = if (prev != null) prev
-          else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema)
-        // Materialize BEFORE the micro-batch ends (its frame is not
-        // re-executable later); eager localCheckpoint also caps the
-        // state lineage at O(1) per batch instead of O(batches).
-        state = graft.operators.Analytics
-          .mergeLatest(base, batch, Seq("user_id", "event_type"),
-            Seq("ts", "event_id"))
-          .drop("_src").localCheckpoint(true)
-        // The superseded state frame's checkpoint blocks are dead the
-        // moment the new frame materializes — release them NOW instead of
-        // waiting for GC + ContextCleaner. Without this, every batch of
-        // every sample leaves a full state copy in the block store; across
-        // a 225-query bench session those dead blocks are exactly the
-        // creeping memory pressure that surfaced as the r11 q141–q145
-        // positional elevation (q143 7.1 s in-session vs 1.2 s solo).
-        // Guard on `prev` — only a REAL superseded checkpoint releases;
-        // batch 0's empty placeholder has no blocks (q213's fold pattern).
-        if (prev != null) graft.operators.Dedup.unpersistBlocks(prev)
+        state = foldStep(s, state, batch) { (base, add) =>
+          graft.operators.Analytics.mergeLatest(base, add,
+            Seq("user_id", "event_type"), Seq("ts", "event_id")).drop("_src")
+        }
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     state
       .select(col("user_id"), col("event_type"),
         col("event_id").as("last_event_id"),
@@ -849,20 +715,6 @@ object StreamingQueries {
       .orderBy(col("user_id"), col("event_type"))
   }
 
-  /** Streaming quarantine routing (dead-letter queue) — the ingest
-    * guard every production stream runs in front of its good-path sink:
-    * each micro-batch splits ONCE on the contract predicate, the clean
-    * rows land in the main channel, violations land in the DLQ with a
-    * reason column — rows are never dropped silently (the property the
-    * gate certifies: main + DLQ partition the input exactly). Both
-    * channels fold into in-session state per batch (q87's foreachBatch
-    * pattern — a real deployment writes two sinks; the split logic is
-    * identical). The contract here: `value` must be ≤ 200 and `user_id`
-    * present — the tail-value rule genuinely fires on the fixture, so
-    * the DLQ path is exercised, not vacuously green.
-    *
-    * Scale: the split is a map-side filter pair per batch — no state, no
-    * shuffle; DLQ volume is bounded by the violation rate. */
   /** The q213 routing predicate, null-safe: a NULL value with a non-null
     * user must route to a channel, not vanish (NULL > 200 is NULL; NULL OR
     * false is NULL, which BOTH filter(bad) and filter(!bad) exclude — a
@@ -874,37 +726,35 @@ object StreamingQueries {
   private[graft] def quarantineBad: Column =
     coalesce(col("value") > 200, lit(false)) || col("user_id").isNull
 
+  /** Streaming quarantine routing (dead-letter queue) — the ingest
+    * guard every production stream runs in front of its good-path sink:
+    * each micro-batch splits ONCE on the contract predicate, the clean
+    * rows land in the main channel, violations land in the DLQ with a
+    * reason column — rows are never dropped silently (the property the
+    * gate certifies: main + DLQ partition the input exactly). Both
+    * channels fold into in-session state per batch ([[foldStep]], as in
+    * q87 — a real deployment writes two sinks; the split logic is
+    * identical). The contract here: `value` must be ≤ 200 and `user_id`
+    * present — the tail-value rule genuinely fires on the fixture, so
+    * the DLQ path is exercised, not vacuously green.
+    *
+    * Scale: the split is a map-side filter pair per batch — no state, no
+    * shuffle; DLQ volume is bounded by the violation rate. */
   private val q213: Q = (s, d) => {
-    val stage = chunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
+    val raw = chunkedSource(s, d, "event_id")
       .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
     val bad = quarantineBad
     var main: DataFrame = null
     var dlq: DataFrame = null
-    val q = raw.writeStream.outputMode(OutputMode.Append())
+    drain(raw.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        def fold(state: DataFrame, add: DataFrame): DataFrame = {
-          val base = if (state != null) state
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], add.schema)
-          val next = base.unionByName(add).localCheckpoint(true)
-          // Release the superseded state frame's blocks eagerly (q87's
-          // discipline) — dead per-batch state copies otherwise accumulate
-          // in the block store for the rest of the bench session.
-          if (state != null) graft.operators.Dedup.unpersistBlocks(state)
-          next
-        }
-        main = fold(main, batch.filter(!bad))
-        dlq = fold(dlq, batch.filter(bad)
+        main = foldStep(s, main, batch.filter(!bad))(_ unionByName _)
+        dlq = foldStep(s, dlq, batch.filter(bad)
           .withColumn("reason",
             when(col("user_id").isNull, lit("null_user"))
-              .otherwise(lit("value_gt_200"))))
+              .otherwise(lit("value_gt_200"))))(_ unionByName _)
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     val mainAgg = main.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), lit("main").as("channel"),
         lit("ok").as("reason"))
@@ -963,21 +813,12 @@ object StreamingQueries {
     * separate from [[q130]] so StreamingSketchSpec can compare it
     * cell-for-cell with the batch [[graft.operators.Analytics.countMin]]. */
   private[graft] def streamedCountMin(s: SparkSession, d: String): DataFrame = {
-    val src = s.readStream
-      .schema(Tables.load(s, d, "documents").schema)
-      .parquet(streamDir(d, "documents"))
-    val sketch = src
+    val sketch = tableStream(s, d, "documents")
       .select(explode(expr("filter(split(text, ' '), t -> t != '')")).as("tok"))
       .select(expr(cmHashFor("tok")).as("_h"))
       .select(posexplode(expr(cmCellsFor("_h"))).as(Seq("j", "bucket")))
       .groupBy(col("j"), col("bucket")).agg(count(lit(1)).as("cnt"))
-    val name = s"graft_stream_cm_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = sketch.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drainToMemory(sketch, OutputMode.Complete())
   }
 
   private val q130: Q = (s, d) => {
@@ -1012,23 +853,14 @@ object StreamingQueries {
     * verbatim. */
   private[graft] def streamedBloomBits(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Analytics
-    val src = s.readStream
-      .schema(Tables.load(s, d, "documents").schema)
-      .parquet(streamDir(d, "documents"))
-    val bits = src
+    val bits = tableStream(s, d, "documents")
       .select(explode(expr("filter(split(text, ' '), t -> t != '')")).as("tok"))
       .select(expr(Analytics.cmHash("tok")).as("_h"))
       .select(posexplode(expr(
         Analytics.cmCells("_h", Analytics.BloomK, Analytics.BloomBits)))
         .as(Seq("j", "bit")))
       .groupBy(col("bit")).agg(count(lit(1)).as("n"))
-    val name = s"graft_stream_bloom_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = bits.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).select(col("bit"))
+    drainToMemory(bits, OutputMode.Complete()).select(col("bit"))
   }
 
   private val q150: Q = (s, d) => {
@@ -1049,20 +881,9 @@ object StreamingQueries {
     * constant state and no distinct pass. Drained state is
     * order-independent, so the q138 gate reuses q135's batch oracle
     * verbatim. */
-  private[graft] def streamedHllRegisters(s: SparkSession, d: String): DataFrame = {
-    val src = s.readStream
-      .schema(Tables.load(s, d, "events").schema)
-      .parquet(streamDir(d, "events"))
-    val regs = graft.operators.Analytics
-      .hllRegisters(src, "event_type", "user_id")
-    val name = s"graft_stream_hll_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = regs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
-  }
+  private[graft] def streamedHllRegisters(s: SparkSession, d: String): DataFrame =
+    drainToMemory(graft.operators.Analytics
+      .hllRegisters(eventsStream(s, d), "event_type", "user_id"), OutputMode.Complete())
 
   private val q138: Q = (s, d) => {
     val est = graft.operators.Analytics
@@ -1464,26 +1285,15 @@ object StreamingQueries {
       .select(pmod(col("value"), lit(buckets.toLong)).as("bucket"), col("value"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-    val name = s"graft_rate_${System.nanoTime()}"
+    val name = s"${SinkPrefix}_${System.nanoTime()}"
     val q = agg.writeStream.outputMode(OutputMode.Complete())
       .format("memory").queryName(name).start()
-    try {
-      // rate-micro-batch can always produce a next batch, so
-      // processAllAvailable() would never return — poll the committed
-      // snapshot until enough rows have flowed through instead. Bail out
-      // (never hang the caller) if the stream dies or stalls.
-      def drained(): Long = spark.table(name).agg(coalesce(sum(col("n")), lit(0L)))
-        .head().getLong(0)
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      while (drained() < minRows) {
-        if (!q.isActive)
-          throw q.exception.getOrElse(
-            new IllegalStateException("rate stream terminated before draining"))
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(s"rate stream stalled below $minRows rows")
-        Thread.sleep(50)
-      }
-    } finally { q.stop(); q.awaitTermination() }
+    // rate-micro-batch can always produce a next batch, so a drain would
+    // never return — poll the committed snapshot until enough rows have
+    // flowed through instead.
+    try awaitUntil(q)(spark.table(name).agg(coalesce(sum(col("n")), lit(0L)))
+      .head().getLong(0) >= minRows)
+    finally { q.stop(); q.awaitTermination() }
     spark.table(name).orderBy(col("bucket"))
   }
 
@@ -1512,19 +1322,10 @@ object StreamingQueries {
   /** Drain the q80 tumbling aggregation through the idempotent parquet sink
     * (complete mode; with the single-file fixture source there is exactly
     * one batch, holding the full result). */
-  def sinkTumblingToParquet(s: SparkSession, d: String, outDir: String): Unit = {
-    val raw = eventsStream(s, d)
-    val agg = raw
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
-    val q = agg.writeStream
+  def sinkTumblingToParquet(s: SparkSession, d: String, outDir: String): Unit =
+    drain(tumblingTotals(eventsStream(s, d)).writeStream
       .outputMode(OutputMode.Complete())
-      .foreachBatch(idempotentBatchWriter(outDir))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      .foreachBatch(idempotentBatchWriter(outDir)))
 
   // ------------------------------------------------------------- stateful
 
@@ -1568,15 +1369,9 @@ object StreamingQueries {
           state.update(st)
           TopKEmit(key, seen, top)
       }
-    val name = s"graft_stream_topk_${System.nanoTime()}"
-    withStatePartitions(spark, 4) {
-      val q = updated.toDF().writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("seen").desc)
-    spark.table(name)
+    drainToMemory(updated.toDF(), OutputMode.Update())
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
       .select(col("event_type"), posexplode(col("top")).as(Seq("_pos", "e")))
       .select(col("event_type"), (col("_pos") + 1).cast("int").as("rank"),
@@ -1636,12 +1431,7 @@ object StreamingQueries {
       .withWatermark("ts", "1 hour")
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
         col("value")).as[EventW]
-    val sessions = sessionizeWithTimeout(raw)
-    val name = s"graft_sessions_${System.nanoTime()}"
-    val q = sessions.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    drainToMemory(sessionizeWithTimeout(raw).toDF(), OutputMode.Append())
       .select(col("user_id"), timestamp_micros(col("start_us")).as("session_start"),
         col("n_events"), col("total_value"))
   }
@@ -1732,22 +1522,11 @@ object StreamingQueries {
   // (q206's rule) — a val here would still be null when the map captures it.
   private def q280: Q = (s, d) => {
     import s.implicits._
-    val stage = timeChunkedStreamDir(s, d, 4)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val raw = src
+    val raw = chunkedSource(s, d, "ts")
       .withWatermark("ts", "1 hour")
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
         col("value")).as[EventW]
-    val sessions = sessionizeWithTimeout(raw)
-    val name = s"graft_stream_tsession_${System.nanoTime()}"
-    withStatePartitions(s, 4) {
-      val q = sessions.toDF().writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drainToMemory(sessionizeWithTimeout(raw).toDF(), OutputMode.Append())
       .select(col("user_id"),
         timestamp_micros(col("start_us")).as("session_start"),
         col("n_events").cast("long").as("n_events"),

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Tables.fixtureFingerprint backs every content-addressed staging dir
-  * (q216's evolve dir, chunkedStreamDir, timeChunkedStreamDir,
+  * (q216's evolve dir, the streaming rangeChunks and streamDir,
   * binaryStageDir). Fixtures come in two shapes: a single parquet FILE
   * (driver testdata) and a Spark-written parquet DIRECTORY (the 10× scale
   * tier) — the helper must fingerprint both, and the directory form must

@@ -1,7 +1,7 @@
 package graft
 
+import graft.streaming.StreamingQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Stream-stream LEFT OUTER interval join (q195's row-level contract,
@@ -20,7 +20,9 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * These four properties are exactly what q195's oracle encodes with its
   * final-watermark cutoff (matched pairs unconditionally; null rows only
-  * for clicks with click_ts + 1 h < min-watermark). */
+  * for clicks with click_ts + 1 h < min-watermark). Every case joins its
+  * MemoryStream sides with the production `StreamingQueries.intervalJoin`,
+  * so the spec certifies the join q195/q252/q262/q279 run. */
 class StreamOuterJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,9 +36,7 @@ class StreamOuterJoinSpec extends SparkSpec {
       .withWatermark("click_ts", "10 minutes")
     val buys = buysIn.toDF().toDF("p_uid", "p_ts", "value")
       .withWatermark("p_ts", "10 minutes")
-    val joined = clicks.join(buys, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_outer")
+    val joined = StreamingQueries.intervalJoin(clicks, buys, "left_outer")
     val name = s"souter_${System.nanoTime()}"
     val q = joined.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(name).start()
@@ -86,9 +86,7 @@ class StreamOuterJoinSpec extends SparkSpec {
       .withWatermark("click_ts", "10 minutes")
     val buys = buysIn.toDF().toDF("p_uid", "p_ts", "value")
       .withWatermark("p_ts", "10 minutes")
-    val joined = clicks.join(buys, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "full_outer")
+    val joined = StreamingQueries.intervalJoin(clicks, buys, "full_outer")
     val name = s"sfouter_${System.nanoTime()}"
     val q = joined.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(name).start()
@@ -153,9 +151,7 @@ class StreamOuterJoinSpec extends SparkSpec {
       .withWatermark("click_ts", "10 minutes")
     val buys = buysIn.toDF().toDF("p_uid", "p_ts", "value")
       .withWatermark("p_ts", "10 minutes")
-    val joined = clicks.join(buys, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_outer")
+    val joined = StreamingQueries.intervalJoin(clicks, buys, "left_outer")
     val name = s"sbound_${System.nanoTime()}"
     val q = joined.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(name).start()
@@ -195,9 +191,7 @@ class StreamOuterJoinSpec extends SparkSpec {
       .withWatermark("click_ts", "10 minutes")
     val buys = buysIn.toDF().toDF("p_uid", "p_ts", "value")
       .withWatermark("p_ts", "10 minutes")
-    val joined = clicks.join(buys, expr(
-      "c_uid = p_uid AND p_ts >= click_ts AND p_ts <= click_ts + interval 1 hour"),
-      "left_semi")
+    val joined = StreamingQueries.intervalJoin(clicks, buys, "left_semi")
     val name = s"ssemi_${System.nanoTime()}"
     val q = joined.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(name).start()

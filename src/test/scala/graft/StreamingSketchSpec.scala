@@ -33,7 +33,6 @@ class StreamingSketchSpec extends SparkSpec {
   }
 
   test("streamed HLL registers == batch hllRegisters register-for-register") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamed = StreamingQueries.streamedHllRegisters(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     val batch = Analytics

@@ -80,6 +80,58 @@ class StreamingSpec extends SparkSpec {
       s"expected exactly user 1's closed session, got $out")
   }
 
+  /** A MemoryStream of ints whose plan throws `msg` on every row. */
+  private def failingStream(msg: String) = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    input.addData(1, 2, 3)
+    val boom = udf((i: Int) => if (i > 0) throw new IllegalStateException(msg) else i)
+    input.toDF().select(boom(col("value")).as("v"))
+  }
+
+  private def causes(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+
+  test("awaitUntil rethrows a dead stream's failure at once, not at its deadline") {
+    val q = failingStream("first batch fails").writeStream.format("noop").start()
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingQueries.awaitUntil(q)(false)
+      }
+      val waited = (System.nanoTime() - t0) / 1e9
+      assert(causes(e).exists(m => m != null && m.contains("first batch fails")),
+        s"unexpected failure: ${causes(e)}")
+      assert(waited < 30, s"rethrew only after $waited s")
+    } finally q.stop()
+  }
+
+  test("drainToMemory inside withConf: a failing drain surfaces, stops its query and restores every conf") {
+    val widthKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val width = spark.conf.get(widthKey)
+    assert(!spark.conf.getAll.contains(providerKey))
+    // A prior width other than the drain's 4, so its restore is visible.
+    spark.conf.set(widthKey, "3")
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingQueries.withConf(spark, providerKey ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+          StreamingQueries.drainToMemory(failingStream("drain fails"),
+            org.apache.spark.sql.streaming.OutputMode.Append())
+        }
+      }
+      assert(causes(e).exists(m => m != null && m.contains("drain fails")),
+        s"unexpected failure: ${causes(e)}")
+      assert(spark.streams.active.isEmpty, "the failed drain left a query running")
+      assert(spark.conf.get(widthKey) == "3")
+      assert(!spark.conf.getAll.contains(providerKey),
+        "a conf absent before withConf must be absent after it")
+    } finally spark.conf.set(widthKey, width)
+  }
+
   test("session count is stable across sf (structure sanity)") {
     val df = StreamingQueries.queries("q81_session_window")(spark, sf0001)
     val n = df.count()

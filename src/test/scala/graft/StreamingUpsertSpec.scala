@@ -15,10 +15,7 @@ import java.util.concurrent.atomic.AtomicInteger
 class StreamingUpsertSpec extends SparkSpec {
 
   test("chunked replay runs 4 micro-batches; folded state == batch merge") {
-    val stage = StreamingQueries.chunkedStreamDir(spark, sf0001, 4)
-    val schema = spark.read.parquet(stage).schema
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
+    val raw = StreamingQueries.chunkedSource(spark, sf0001, "event_id")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
         col("value"))
     val batches = new AtomicInteger(0)
