@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Reference-parity layer (SURVEY §2.1, §7.2).
@@ -20,7 +21,11 @@ import graft.Tables
   *
   * [[UniquePrefix]] is the reference's one shipped query (`main.cpp:8-13`):
   * the minimal prefix length L such that every input line is uniquely
-  * identified by its first L characters.
+  * identified by its first L code points. Both of its forms read the input
+  * range-partitioned and sorted once, the reference's range split plus
+  * per-mapper sort; the iterative form then runs the reference's loop over
+  * L as one map-only job per round, the single-pass form (and q90) one
+  * fold over adjacent pairs.
   */
 object Parity {
   type Q = (SparkSession, String) => DataFrame
@@ -225,47 +230,71 @@ final case class MapReduceJob[K, V, O](
     run(spark, spark.read.textFile(path))
 }
 
-/** The reference's shipped query (`main.cpp:8-13`), in its two forms. */
+/** The reference's shipped query (`main.cpp:8-13`), in its two forms.
+  *
+  * Both forms count prefixes in code points, as Spark's `substring` and
+  * `length` do, and both read the non-empty lines range-partitioned and
+  * sorted by value ([[sortedLines]]): in that order every group of lines
+  * sharing an L-prefix is contiguous, so adjacent pairs, plus the pairs
+  * across partition boundaries, decide the answer. */
 object UniquePrefix {
 
   /** Iterative parity form — mirrors the driver loop `main.cpp:30-68`: try
-    * L = 1, 2, … until no prefix collides. Input is persisted across
-    * iterations (the reference re-reads its input every pass, `main.cpp:53`).
-    * Returns None if duplicate lines exist (the reference would loop forever,
-    * `main.cpp:68` — documented divergence, SURVEY §7.5). */
+    * L = 1, 2, … until no prefix collides, one check per L. The input never
+    * changes between rounds, so it is shuffled, sorted and `persist()`ed
+    * once (the reference re-reads and re-sorts it every pass,
+    * `main.cpp:53`, `MapReduce.h:80-86`, `:187`):
+    *  - one stats job materializes the cache and returns, per non-empty
+    *    partition, its first and last line, its maximum length and whether
+    *    two adjacent lines are equal;
+    *  - each round L runs at most one map-only job over the cached rows,
+    *    asking whether two adjacent lines share their first L code points.
+    *    The partition-boundary pairs are answered on the driver from the
+    *    stats; when one of them collides, the round runs no job.
+    * Returns None if duplicate lines exist (the reference would loop
+    * forever, `main.cpp:68` — documented divergence, SURVEY §7.5) or if no
+    * L up to `maxLen` separates the lines. */
   def iterative(spark: SparkSession, lines: Dataset[String], maxLen: Int = 1024): Option[Int] = {
-    val df = lines.filter((l: String) => l.nonEmpty).toDF("value").persist()
+    val sorted = sortedLines(spark, lines, 0).rdd.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val maxL = df.agg(max(length(col("value")))).head().getInt(0)
-      val hasFullDup = !df.groupBy(col("value")).count()
-        .where(col("count") > 1).isEmpty
-      if (hasFullDup) return None
-      var l = 1
-      while (l <= math.min(maxL, maxLen)) {
-        val collides = !df.select(substring(col("value"), 1, l).as("prefix"))
-          .groupBy(col("prefix")).count().where(col("count") > 1).isEmpty
-        if (!collides) return Some(l)
-        l += 1
+      // (first, last, max length, adjacent duplicate) per non-empty
+      // partition; RDD.collect keeps partition, hence range, order.
+      val stats = sorted.mapPartitions { it =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val first = it.next()
+          var prev = first; var longest = codePoints(first); var dup = false
+          while (it.hasNext) {
+            val cur = it.next()
+            if (cur == prev) dup = true
+            longest = math.max(longest, codePoints(cur))
+            prev = cur
+          }
+          Iterator.single((first, prev, longest, dup))
+        }
+      }.collect()
+      // Last line of each partition against the first of the next.
+      val boundaries = stats.zip(stats.drop(1)).map { case (a, b) => (a._2, b._1) }
+      if (stats.isEmpty || stats.exists(_._4) || boundaries.exists { case (x, y) => x == y })
+        return None
+      val boundaryLcp = boundaries.map { case (x, y) => lcp(x, y) }.maxOption.getOrElse(0)
+      (1 to math.min(stats.map(_._3).max, maxLen)).find { l =>
+        boundaryLcp < l &&
+          !spark.sparkContext.runJob(sorted, (it: Iterator[String]) => adjacentShare(it, l))
+            .contains(true)
       }
-      None
-    } finally df.unpersist()
+    } finally sorted.unpersist()
   }
 
-  /** Single-pass engine-native form (SURVEY §7.2.2): the answer only depends
-    * on *adjacent* pairs in sorted order, so: range-repartition by value,
-    * sort within partitions, compute max adjacent LCP per partition plus the
-    * partition's first/last lines, then resolve the k−1 partition-boundary
-    * pairs on the driver (k = numPartitions rows — O(k), not O(N)).
-    * One shuffle, one pass, no global window. */
+  /** Single-pass engine-native form (SURVEY §7.2.2): compute the max
+    * adjacent LCP per partition plus the partition's first/last lines,
+    * then resolve the k−1 partition-boundary pairs on the driver
+    * (k = numPartitions rows — O(k), not O(N)). One shuffle, one pass, no
+    * global window. */
   def solve(spark: SparkSession, lines: Dataset[String], partitions: Int = 0): Option[Int] = {
     import spark.implicits._
-    val n = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    val sorted = lines.filter((l: String) => l.nonEmpty).toDF("value")
-      .repartitionByRange(n, col("value"))
-      .sortWithinPartitions(col("value"))
-      .as[String]
     // (maxLcp, hasDup, first, last, maxLen) per non-empty partition
-    val stats = sorted.mapPartitions { it =>
+    val stats = sortedLines(spark, lines, partitions).mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
       else {
         var first: String = null; var prev: String = null
@@ -277,7 +306,7 @@ object UniquePrefix {
             if (cur == prev) dup = true
             maxLcp = math.max(maxLcp, lcp(prev, cur))
           }
-          maxLen = math.max(maxLen, cur.length)
+          maxLen = math.max(maxLen, codePoints(cur))
           prev = cur
         }
         Iterator.single((maxLcp, dup, first, prev, maxLen))
@@ -302,17 +331,53 @@ object UniquePrefix {
     if (dup || maxLcp >= full) None else Some(maxLcp + 1)
   }
 
-  private[operators] def lcp(a: String, b: String): Int = {
+  /** The non-empty lines as column `value`, range-partitioned into
+    * `partitions` (0: `spark.sql.shuffle.partitions`) and sorted within
+    * each partition: partition k holds the k-th value range. Spark orders
+    * strings by their UTF-8 bytes, which is code-point order. */
+  private def sortedLines(spark: SparkSession, lines: Dataset[String],
+      partitions: Int): Dataset[String] = {
+    import spark.implicits._
+    val n = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
+    lines.filter((l: String) => l.nonEmpty).toDF("value")
+      .repartitionByRange(n, col("value"))
+      .sortWithinPartitions(col("value"))
+      .as[String]
+  }
+
+  /** Whether two adjacent lines of `it` share their first `l` code points.
+    * Streams the iterator and stops at the first such pair. */
+  private def adjacentShare(it: Iterator[String], l: Int): Boolean = {
+    if (!it.hasNext) return false
+    var prev = it.next()
+    while (it.hasNext) {
+      val cur = it.next()
+      if (lcp(prev, cur) >= l) return true
+      prev = cur
+    }
+    false
+  }
+
+  // codePointCount returns at once on a Latin-1 string (compact strings),
+  // so ASCII input pays no scan for these counts.
+  private def codePoints(s: String): Int = s.codePointCount(0, s.length)
+
+  /** Length in code points of the longest common prefix of two well-formed
+    * UTF-16 strings. The loop compares chars; a pair that first differs in
+    * the low half of a surrogate pair shares no code point there, so the
+    * high half before the mismatch is not counted. */
+  private[graft] def lcp(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
     while (i < n && a.charAt(i) == b.charAt(i)) i += 1
-    i
+    if (i > 0 && Character.isHighSurrogate(a.charAt(i - 1))) i -= 1
+    a.codePointCount(0, i)
   }
 
-  /** Brute-force oracle for property tests: smallest L with all prefixes
-    * unique (driver-side; test-only). */
+  /** Brute-force oracle for property tests: smallest L, in code points,
+    * with all prefixes unique (driver-side; test-only). */
   private[graft] def bruteForce(lines: Seq[String]): Option[Int] = {
-    val xs = lines.filter(_.nonEmpty)
+    val xs = lines.filter(_.nonEmpty).map(_.codePoints.toArray.toSeq)
     if (xs.isEmpty) return None
     if (xs.distinct.size != xs.size) return None
     val maxL = xs.map(_.length).max

@@ -494,26 +494,24 @@ object StreamingQueries {
     // names those chunk files.
     val root = stagingDir(d, "events", "graft_ckpt_sink_", s"event_id_$Chunks")
     val outDir = root.resolve("out"); val ckpt = root.resolve("ckpt")
-    val marker = root.resolve("_DONE")
-    if (!Files.exists(marker)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      Files.createDirectories(root)
-      def sink() = chunkedSource(s, d, "event_id")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-        .writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString)
-      // Run 1: stop after the first committed micro-batch — mid-stream.
-      val q1 = sink().start()
-      try awaitUntil(q1)(q1.recentProgress.exists(_.numInputRows > 0))
-      finally q1.stop()
-      // Run 2: same checkpoint — resumes from the committed offsets and
-      // drains the remaining batches.
-      drain(sink())
-      Files.write(marker, Array.emptyByteArray)
-    }
+    // Every call starts from an empty root, so every call runs the
+    // stop/restart seam. The root outlives the call: the result reads out/.
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    Files.createDirectories(root)
+    def sink() = chunkedSource(s, d, "event_id")
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("value"))
+      .writeStream.outputMode(OutputMode.Append())
+      .format("parquet")
+      .option("path", outDir.toString)
+      .option("checkpointLocation", ckpt.toString)
+    // Run 1: stop after the first committed micro-batch — mid-stream.
+    val q1 = sink().start()
+    try awaitUntil(q1)(q1.recentProgress.exists(_.numInputRows > 0))
+    finally q1.stop()
+    // Run 2: same checkpoint — resumes from the committed offsets and
+    // drains the remaining batches.
+    drain(sink())
     s.read.parquet(outDir.toString)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))

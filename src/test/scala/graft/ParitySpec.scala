@@ -29,6 +29,16 @@ class ParitySpec extends SparkSpec {
     assert(UniquePrefix.iterative(spark, lines) === None)
   }
 
+  test("non-BMP lines: prefixes count code points in all three forms") {
+    // U+10000 "a" and U+10001 "a" differ in their first code point, which
+    // in UTF-16 is a surrogate pair sharing its high half.
+    val lines = Seq("\uD800\uDC00a", "\uD800\uDC01a")
+    val ds = spark.createDataset(lines)
+    assert(UniquePrefix.solve(spark, ds) === Some(1))
+    assert(UniquePrefix.iterative(spark, ds) === Some(1))
+    assert(UniquePrefix.bruteForce(lines) === Some(1))
+  }
+
   test("empty lines are dropped (MapReduce.h:233-234 parity)") {
     val lines = spark.createDataset(Seq("", "ab", "", "ac"))
     assert(UniquePrefix.solve(spark, lines) === Some(2))
