@@ -152,6 +152,14 @@ private[graft] object BenchSampling {
     * falling back to the poisoned median (r13 review finding). */
   def reported(xs: Seq[Double], fired: Boolean): Double =
     if (fired && xs.size >= 2) median(xs.sorted.dropRight(1)) else median(xs)
+  /** Directory for a run's bench_out.json and bench_samples.json: the
+    * working directory for a full run (the committed record), and
+    * `target/bench-subset` for a `SPARK_GRAFT_ONLY` subset, so that a
+    * subset never overwrites the record nor becomes the next run's prior
+    * floors. */
+  def outputDir(only: Option[Set[String]]): java.nio.file.Path =
+    if (only.isDefined) java.nio.file.Paths.get("target", "bench-subset")
+    else java.nio.file.Paths.get("")
 }
 
 object Bench {
@@ -172,7 +180,8 @@ object Bench {
     val stallExtra =
       math.max(0, sys.env.getOrElse("SPARK_GRAFT_STALL_EXTRA", "2").toInt)
     // Prior committed floors for the cross-record drift defense (round
-    // 17): read BEFORE this run clobbers bench_samples.json. Same-basis
+    // 17): read BEFORE a full run clobbers bench_samples.json (a subset
+    // run writes elsewhere, BenchSampling.outputDir). Same-basis
     // only (sf + threads — parsePriorFloors scaladoc); in a session the
     // file may instead hold the previous run's samples, which is exactly
     // the comparison wanted (the freshest same-basis floor available).
@@ -465,12 +474,18 @@ object Bench {
         "record with no (or few) per-query firings; record stamped " +
         "record_hot. Do not commit as the round's steady-state record " +
         "without a quiet-window re-run.")
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
+    val outDir = BenchSampling.outputDir(only)
+    if (only.isDefined) {
+      java.nio.file.Files.createDirectories(outDir)
+      System.err.println(s"[bench] subset run: bench_out.json and " +
+        s"bench_samples.json written under $outDir")
+    }
+    java.nio.file.Files.write(outDir.resolve("bench_out.json"),
       (json + "\n").getBytes("UTF-8"))
     // "sf" + "threads" stamp the record's measurement basis so the NEXT
     // run's drift defense only ever compares like with like (a tier run
     // or a 32-thread driver run must not arbitrate a local[4] sf0.1 run).
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench_samples.json"),
+    java.nio.file.Files.write(outDir.resolve("bench_samples.json"),
       (s"""{"metric":"samples","runs":$runs,"threads":$threadsJson,"sf":"$sfDir","value":${fmt("2", total)},"sum_of_mins":${fmt("2", sumOfMins)},"window_hot":$winHot,"record_hot":$recHot,"fired":$firedList,"drift_hot":$driftHotList,"queries":$detail}""" + "\n").getBytes("UTF-8"))
     // The short total line is the one that must survive the tail; it is
     // bounded (~110 chars) by construction. Warn only if it somehow grows.

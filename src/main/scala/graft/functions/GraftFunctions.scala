@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -909,11 +910,15 @@ object GraftFunctions {
       .createOrReplaceTempFunction(name, builder, "built-in")
 
   /** Idempotent per-session registration; afterwards the functions are
-    * available to SQL and `expr(...)`. */
+    * available to SQL and `expr(...)`. A name whose registered builder is
+    * already graft's own (the [[builders]] entries are stable instances,
+    * whether registered here or injected by [[graft.GraftExtensions]]) is
+    * left alone, so repeat calls write nothing to the registry. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 }

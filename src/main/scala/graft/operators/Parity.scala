@@ -10,8 +10,10 @@ import graft.Tables
   * [[MapReduceJob]] mirrors the reference's entire public API — construct with
   * (mappers, reducers), plug a mapper and a reducer, run
   * (`MapReduce.h:35-51`) — re-expressed as one Spark shuffle:
-  * map → hash repartition on key (the key-group-integrity guarantee the
-  * reference enforces by range-splitting sorted files, `MapReduce.h:80-86`) →
+  * map over the input's own splits (at most `mappers` tasks; the reference's
+  * mappers each read their own byte range, `MapReduce.h:53-68`) → hash
+  * repartition on key (the key-group-integrity guarantee the reference
+  * enforces by range-splitting sorted files, `MapReduce.h:80-86`) →
   * per-partition sort (`MapReduce.h:187`) → ordered streaming fold over
   * adjacent equal keys (the reference's reducer loop, `MapReduce.h:192-208`).
   * The reference's phases 2–3 (external k-way merge + manual shuffle files,
@@ -154,7 +156,13 @@ object Parity {
   *
   * Reference mapping (file:line from AlexShneur/12_mapreduce):
   *  - `MapReduce(mappers_count, reducers_count)` (`MapReduce.h:35-39`) → the
-  *    two parallelism fields;
+  *    two parallelism fields. [[mappers]] caps the map tasks: the map runs
+  *    over the input's own partitions (a file source's byte-range splits),
+  *    merged down to at most `mappers` by a narrow `coalesce`, as a Hadoop
+  *    InputFormat decides the split count. An input with fewer partitions
+  *    than `mappers` runs that many map tasks; it is not shuffled up to
+  *    `mappers`. [[reducers]] is the hash partition count of the key
+  *    shuffle;
   *  - `set_mapper` (`MapReduce.h:41-44`) → [[mapper]], generalized from
   *    1-in/1-out to flatMap shape (covers UDTF-style mappers, SURVEY §2.2);
   *  - `set_reducer` (`MapReduce.h:46-49`) → [[reducer]], receiving each key
@@ -162,7 +170,8 @@ object Parity {
   *    loop (`MapReduce.h:192-208`) grouped for the user;
   *  - `run(input, output)` (`MapReduce.h:51-126`) → [[run]] /[[runTextFile]].
   *
-  * Scale notes: the reducer consumes values as an Iterator (never
+  * Scale notes: the job is one shuffle — no data moves before the map, as in
+  * the reference. The reducer consumes values as an Iterator (never
   * materialized), partitioning is hash-by-key (same key-integrity contract as
   * `MapReduce.h:80-86` but load-balanced by hash instead of equal-line-count
   * ranges), and the per-partition sort feeds a streaming adjacent-key fold,
@@ -174,16 +183,17 @@ final case class MapReduceJob[K, V, O](
     mapper: String => IterableOnce[(K, V)],
     reducer: (K, Iterator[V]) => IterableOnce[O]) {
 
-  /** Run over an already-loaded line Dataset (text parity: blank lines are
-    * dropped, matching `MapReduce.h:233-234`). */
+  /** Run over an already-loaded line Dataset, in at most [[mappers]] map
+    * tasks over its partitions (text parity: blank lines are dropped in
+    * the map, matching `MapReduce.h:233-234`). */
   def run(spark: SparkSession, lines: Dataset[String])(
       implicit kvEnc: org.apache.spark.sql.Encoder[(K, V)],
       oEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] = {
     val m = mapper; val r = reducer // avoid capturing `this` in task closures
     val mapped = lines
-      .repartition(mappers)
-      .filter((l: String) => l.nonEmpty)
-      .mapPartitions((it: Iterator[String]) => it.flatMap(l => m(l).iterator))
+      .coalesce(mappers)
+      .mapPartitions((it: Iterator[String]) =>
+        it.filter(_.nonEmpty).flatMap(l => m(l).iterator))
     mapped
       .repartition(reducers, col("_1"))
       .sortWithinPartitions(col("_1"))

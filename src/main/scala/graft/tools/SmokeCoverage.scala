@@ -498,8 +498,9 @@ object SmokeCoverage {
       "key-integrity range shuffle that carries it; per-partition state " +
       "is one carried key"),
     "q91_mapreduce_wordcount" -> ("O2/O7/O8 parity chain: map projection + " +
-      "range shuffle + ordered fold — same ParitySpec property locks; the " +
-      "fold state is one (key, count) pair per partition"),
+      "the job's one hash shuffle on the key + ordered fold — same ParitySpec " +
+      "property locks, MapReduceJobSpec pins the single exchange; the fold " +
+      "state is one (key, count) pair per partition"),
     "q32_salted_agg" -> ("the skew MITIGATION itself — salt fan-out bounds " +
       "per-key partition load by construction (salt × keys exchange rows); " +
       "certified by SkewSpec against the skewed fixture"),

@@ -175,4 +175,12 @@ class BenchSamplingSpec extends AnyFunSuite {
     // is no steady-state estimate to compare against.
     assert(!windowHot(5.0, 0.0))
   }
+
+  test("a subset run writes under target/bench-subset, a full run in place") {
+    val here = java.nio.file.Paths.get("")
+    assert(outputDir(None) == here)
+    val sub = outputDir(Some(Set("q91_mapreduce_wordcount")))
+    assert(sub == java.nio.file.Paths.get("target", "bench-subset"))
+    assert(sub.resolve("bench_samples.json") != here.resolve("bench_samples.json"))
+  }
 }

@@ -1,11 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Literal
+
+import graft.functions.GraftFunctions
 
 /** Proves the `spark.sql.extensions=graft.GraftExtensions` installation
   * path: a session built with only that conf resolves every native
   * function in SQL with no `GraftFunctions.register` call — the
-  * cluster-wide deployment mode (spark-submit / Connect / Thrift). */
+  * cluster-wide deployment mode (spark-submit / Connect / Thrift) — and
+  * that the per-session `register` path is idempotent. */
 class ExtensionsSpec extends SparkSpec {
 
   test("a session built with graft.GraftExtensions resolves all native functions") {
@@ -51,5 +56,21 @@ class ExtensionsSpec extends SparkSpec {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("a second GraftFunctions.register writes nothing to the registry") {
+    val reg = spark.sessionState.functionRegistry
+    def infos() = GraftFunctions.builders.map { case (n, _) =>
+      reg.lookupFunction(FunctionIdentifier(n)).get }
+    GraftFunctions.register(spark)
+    val first = infos()
+    GraftFunctions.register(spark)
+    // Every write stores a fresh ExpressionInfo, so identity shows none.
+    first.zip(infos()).foreach { case (a, b) => assert(a eq b, a.getName) }
+    // A name taken by another builder is restored to graft's own.
+    GraftFunctions.registerCapturing(spark, "graft_zvalue", _ => Literal(0L))
+    GraftFunctions.register(spark)
+    assert(reg.lookupFunctionBuilder(FunctionIdentifier("graft_zvalue")) ===
+      GraftFunctions.builders.collectFirst { case ("graft_zvalue", b) => b })
   }
 }
