@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -193,32 +191,7 @@ object Bench {
           sfDir, cpus)
       else Map.empty
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      // saveAsTable-based queries (bucketed joins) must not drop a
-      // spark-warehouse/ dir into the repo working directory.
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_bench").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOT set: spark.sql.adaptive.coalescePartitions.parallelismFirst=
-      // false (the docs' production lean). A/B'd in r21 on a 13-query mix:
-      // bytes-based post-shuffle sizing collapsed the CPU-dense operators
-      // to a handful of 1 MB partitions and serialized them on 32 cores —
-      // q159 7.6→30 s, q226 4.5→15 s, q139 1.8→11 s. This fixture is
-      // small in bytes but heavy in CPU per byte, so parallelism-first
-      // (the default) is the correct coalescing mode here; at a 100 TB
-      // deployment the advisory-size path dominates either way.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Recursive-CTE closure output is input-proportional by design; the
-      // 1M-row default is a unit mismatch at bench/tier scale (hit in the
-      // r15 10x sweep). Finite ceiling, not Int.MaxValue — the row guard
-      // stays meaningful (Graft.CteRecursionRowCeiling scaladoc).
-      .config("spark.sql.cteRecursionRowLimit", Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
 
     def execOnce(name: String): Double = {
       val t0 = System.nanoTime()

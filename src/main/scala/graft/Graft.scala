@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 object Graft {
   import operators._
 
-  /** Session-level `spark.sql.cteRecursionRowLimit` ceiling used by every
-    * repo entry point (Bench/Verify/SchemaGolden/ExplainDump/test base).
+  /** Session-level `spark.sql.cteRecursionRowLimit` ceiling that
+    * [[LocalSession]] sets for every repo entry point.
     * Finite on purpose (r15 ADVICE): Int.MaxValue would disable the
     * row-volume guard for ALL recursive CTEs — the level limit bounds
     * depth but not per-level fan-out, so a miskeyed recursive join could

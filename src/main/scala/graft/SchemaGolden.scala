@@ -143,18 +143,7 @@ object SchemaGolden {
     "q274_join_view_maintenance")
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_golden").toString)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Closure row-limit raised session-wide to a finite ceiling
-      // (input-proportional by design; Graft.CteRecursionRowCeiling).
-      .config("spark.sql.cteRecursionRowLimit", Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sfDir)

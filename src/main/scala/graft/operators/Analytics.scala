@@ -2447,11 +2447,10 @@ object Analytics {
     * amplifies SESSION heap residue more than any other on the surface
     * — its bounded contribution shuffle+sort has the highest allocation
     * rate, so accumulated collectable old-gen occupancy costs it the
-    * most GC stalls per second (PERF.md "q226 heat amplification:
-    * root-caused"; reproduce with `graft.tools.Q226Probe` — zero spill,
-    * zero fetch-wait, floor returns to baseline after a full GC). A hot
-    * q226 sample in a long session is a GC-budget reading, not a plan
-    * regression. */
+    * most GC stalls per second (PERF.md "Round-19 q226 heat
+    * amplification: root-caused": zero spill, zero fetch-wait, floor
+    * returns to baseline after a full GC). A hot q226 sample in a long
+    * session is a GC-budget reading, not a plan regression. */
   def recommendItemsCapped(df: DataFrame, basketCol: String, itemCol: String,
       k: Int = 3, maxItemsPerBasket: Int = 100,
       maxNeighborsPerItem: Int = 50, maxContribPerUser: Int = 2400): DataFrame = {

@@ -34,12 +34,12 @@ object Parity {
 
   /** Single-pass unique-prefix over customer names, scale form: the answer
     * only depends on *adjacent* pairs in sorted order, so range-repartition,
-    * sort within partitions, fold each partition to (max adjacent LCP,
-    * adjacent-dup count, first, last), then fold the ≤ numPartitions stat
-    * rows — including the partition-boundary pairs — in one tiny task.
-    * One shuffle, no global Window, O(numPartitions) final stage. One job vs
-    * the reference's L jobs (`main.cpp:30-68`); same mechanics as
-    * [[UniquePrefix.solve]] but expressed as a DataFrame for the oracle. */
+    * sort within partitions, fold each partition to its [[RangeStats]], then
+    * combine the ≤ numPartitions stat rows — including the partition-boundary
+    * pairs — in one tiny task. One shuffle, no global Window,
+    * O(numPartitions) final stage. One job vs the reference's L jobs
+    * (`main.cpp:30-68`); same folds as [[UniquePrefix.solve]] but expressed
+    * as a DataFrame for the oracle. */
   private val q90: Q = (s, d) => {
     import s.implicits._
     val n = s.sessionState.conf.numShufflePartitions
@@ -47,45 +47,15 @@ object Parity {
       .select(col("c_name").as("value")).as[String]
       .repartitionByRange(n, col("value"))
       .sortWithinPartitions(col("value"))
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          var first: String = null; var prev: String = null
-          var maxLcp = 0; var dups = 0L
-          while (it.hasNext) {
-            val cur = it.next()
-            if (first == null) first = cur
-            else {
-              if (cur == prev) dups += 1
-              maxLcp = math.max(maxLcp, UniquePrefix.lcp(prev, cur))
-            }
-            prev = cur
-          }
-          Iterator.single((maxLcp, dups, first, prev))
-        }
-      }
+      .mapPartitions(RangeStats.fold)
       // pid tags each stat row with its physical partition index — range
       // partition k holds the k-th value range, so sorting the (≤ n) stat
       // rows by pid restores global value order for the boundary pairs.
-      .toDF("max_lcp", "n_dup", "first", "last")
       .withColumn("pid", spark_partition_id())
     stats
       .coalesce(1).sortWithinPartitions(col("pid"))
-      .select(col("max_lcp"), col("n_dup"), col("first"), col("last"))
-      .as[(Int, Long, String, String)]
-      .mapPartitions { it =>
-        // O(numPartitions) boundary fold: last of range k vs first of k+1.
-        var maxLcp = 0; var dups = 0L; var prevLast: String = null
-        while (it.hasNext) {
-          val (lcpK, dupK, firstK, lastK) = it.next()
-          if (prevLast != null) {
-            if (prevLast == firstK) dups += 1
-            maxLcp = math.max(maxLcp, UniquePrefix.lcp(prevLast, firstK))
-          }
-          maxLcp = math.max(maxLcp, lcpK); dups += dupK; prevLast = lastK
-        }
-        Iterator.single((maxLcp + 1, dups))
-      }
+      .drop("pid").as[RangeStats]
+      .mapPartitions(it => RangeStats.combine(it).map(r => (r.maxLcp + 1, r.dups)).iterator)
       .toDF("minimal_prefix_len", "n_dup_pairs")
   }
 
@@ -296,49 +266,19 @@ object UniquePrefix {
     } finally sorted.unpersist()
   }
 
-  /** Single-pass engine-native form (SURVEY §7.2.2): compute the max
-    * adjacent LCP per partition plus the partition's first/last lines,
-    * then resolve the k−1 partition-boundary pairs on the driver
-    * (k = numPartitions rows — O(k), not O(N)). One shuffle, one pass, no
-    * global window. */
+  /** Single-pass engine-native form (SURVEY §7.2.2): fold each partition
+    * to its [[RangeStats]], then combine the k stat rows, partition-boundary
+    * pairs included, on the driver (k = numPartitions rows — O(k), not
+    * O(N)). One shuffle, one pass, no global window. */
   def solve(spark: SparkSession, lines: Dataset[String], partitions: Int = 0): Option[Int] = {
     import spark.implicits._
-    // (maxLcp, hasDup, first, last, maxLen) per non-empty partition
-    val stats = sortedLines(spark, lines, partitions).mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var first: String = null; var prev: String = null
-        var maxLcp = 0; var dup = false; var maxLen = 0
-        while (it.hasNext) {
-          val cur = it.next()
-          if (first == null) first = cur
-          else {
-            if (cur == prev) dup = true
-            maxLcp = math.max(maxLcp, lcp(prev, cur))
-          }
-          maxLen = math.max(maxLen, codePoints(cur))
-          prev = cur
-        }
-        Iterator.single((maxLcp, dup, first, prev, maxLen))
-      }
-    }.collect() // ≤ numPartitions rows — the O10-style tiny driver result
-    if (stats.isEmpty) return None
-    var maxLcp = stats.map(_._1).max
-    var dup = stats.exists(_._2)
-    // Boundary pairs: last of partition i vs first of partition i+1.
-    // repartitionByRange gives ordered, non-overlapping ranges.
-    stats.sliding(2).foreach {
-      case Array((_, _, _, lastA, _), (_, _, firstB, _, _)) =>
-        if (lastA == firstB) dup = true
-        maxLcp = math.max(maxLcp, lcp(lastA, firstB))
-      case _ =>
-    }
-    // `full` = true max line length (an interior line can be the longest, so
-    // first/last lengths alone would under-count and falsely return None for
-    // inputs like ["b", "caaax", "caaay", "d"]). For distinct lines
-    // maxLcp < full always holds; the check only guards degenerate inputs.
-    val full = stats.map(_._5).max
-    if (dup || maxLcp >= full) None else Some(maxLcp + 1)
+    // ≤ numPartitions rows, in range order — the O10-style tiny driver result
+    val stats = sortedLines(spark, lines, partitions).mapPartitions(RangeStats.fold).collect()
+    // For distinct lines maxLcp < longest always holds; the check only
+    // guards degenerate inputs.
+    RangeStats.combine(stats.iterator)
+      .filter(r => r.dups == 0 && r.maxLcp < r.longest)
+      .map(_.maxLcp + 1)
   }
 
   /** The non-empty lines as column `value`, range-partitioned into
@@ -370,7 +310,7 @@ object UniquePrefix {
 
   // codePointCount returns at once on a Latin-1 string (compact strings),
   // so ASCII input pays no scan for these counts.
-  private def codePoints(s: String): Int = s.codePointCount(0, s.length)
+  private[operators] def codePoints(s: String): Int = s.codePointCount(0, s.length)
 
   /** Length in code points of the longest common prefix of two well-formed
     * UTF-16 strings. The loop compares chars; a pair that first differs in
@@ -393,4 +333,41 @@ object UniquePrefix {
     val maxL = xs.map(_.length).max
     (1 to maxL).find(l => xs.map(_.take(l)).distinct.size == xs.size)
   }
+}
+
+/** What [[UniquePrefix.solve]] and q90 know of a run of sorted lines: the
+  * longest common prefix of any two adjacent lines, the number of adjacent
+  * equal pairs, the first and last line and the longest line, prefixes
+  * and lengths in code points. */
+private[graft] final case class RangeStats(
+    maxLcp: Int, dups: Long, first: String, last: String, longest: Int)
+
+private[graft] object RangeStats {
+
+  /** The stats of one sorted partition; none for an empty one. */
+  def fold(it: Iterator[String]): Iterator[RangeStats] =
+    if (!it.hasNext) Iterator.empty
+    else {
+      val first = it.next()
+      var prev = first; var maxLcp = 0; var dups = 0L
+      var longest = UniquePrefix.codePoints(first)
+      while (it.hasNext) {
+        val cur = it.next()
+        if (cur == prev) dups += 1
+        maxLcp = math.max(maxLcp, UniquePrefix.lcp(prev, cur))
+        longest = math.max(longest, UniquePrefix.codePoints(cur))
+        prev = cur
+      }
+      Iterator.single(RangeStats(maxLcp, dups, first, prev, longest))
+    }
+
+  /** The stats of consecutive ranges, given in range order, as one range:
+    * the last line of each range and the first of the next are a pair too. */
+  def combine(ranges: Iterator[RangeStats]): Option[RangeStats] =
+    ranges.reduceOption { (a, b) =>
+      RangeStats(
+        math.max(math.max(a.maxLcp, b.maxLcp), UniquePrefix.lcp(a.last, b.first)),
+        a.dups + b.dups + (if (a.last == b.first) 1 else 0),
+        a.first, b.last, math.max(a.longest, b.longest))
+    }
 }

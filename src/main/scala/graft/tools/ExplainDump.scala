@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes EXPLAIN.md: executed physical plans of headline queries at
@@ -137,22 +136,7 @@ object ExplainDump {
   )
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      // saveAsTable-based queries (q89) must not drop spark-warehouse/
-      // into the repo working directory (same guard as Verify/Bench).
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_explain").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Closure row-limit raised session-wide to a finite ceiling
-      // (input-proportional by design; Graft.CteRecursionRowCeiling).
-      .config("spark.sql.cteRecursionRowLimit", graft.Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(4)
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# EXPLAIN — executed physical plans (sf0.001, AQE final)\n\n")

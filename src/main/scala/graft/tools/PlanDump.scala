@@ -21,18 +21,9 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(4).getOrElse("4")
+    val cpus = args.lift(4).getOrElse("4").toInt
     Files.createDirectories(outDir)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh_plandump").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.cteRecursionRowLimit", graft.Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     names.foreach { name =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Dedup, TextAnalysis}
@@ -21,14 +21,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "20").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(32)
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
     val n = base.count()

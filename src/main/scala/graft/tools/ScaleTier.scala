@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materializes a second scale tier on disk: a K×-replicated (default 10×,
@@ -77,14 +77,7 @@ object ScaleTier {
         "reduce over zero copies throw). K must also stay below the " +
         "64-dim embedding size for the rotation perturbation to stay " +
         "non-identity — 30 does.")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-tier")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(32)
 
     def src(name: String): DataFrame = graft.Tables.load(spark, srcDir, name)
 

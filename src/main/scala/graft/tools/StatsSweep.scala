@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Graft, SparkEntry, SchemaGolden}
+import graft.{SparkEntry, SchemaGolden}
 
 /** One-shot full-surface stats-flip sweep (VERDICT r15 item 5).
   *
@@ -31,16 +31,7 @@ object StatsSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_sweep").toString)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.cteRecursionRowLimit", Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
 
     val golden: Map[String, String] =
       scala.io.Source.fromFile(SchemaGolden.goldenPlanPath).getLines()

@@ -90,15 +90,12 @@ class IterBroadcastPathSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    ListenerBusDrain.drain(sc)
     val before = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    try {
+    ListenerBusDrain.observe(sc, listener) {
       val df = f()
       df.collect()
       Dedup.unpersistBlocks(df)
-      ListenerBusDrain.drain(sc)
-    } finally sc.removeSparkListener(listener)
+    }
     (jobs.get, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 

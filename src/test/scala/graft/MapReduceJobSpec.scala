@@ -51,10 +51,7 @@ class MapReduceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         seen.put(i.stageId, (i.numTasks, i.taskMetrics.shuffleWriteMetrics.bytesWritten))
       }
     }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    val rows = try { val r = ds.collect(); ListenerBusDrain.drain(sc); r }
-      finally sc.removeSparkListener(listener)
+    val rows = ListenerBusDrain.observe(sc, listener)(ds.collect())
     (rows, seen.asScala.toSeq.sortBy(_._1).map(_._2))
   }
 

@@ -12,23 +12,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Threads of the shared session. */
+  val Cpus = 4
+
   /** Shared across suites — sbt forks one JVM for all tests; building one
     * session avoids 10s of startup per suite. */
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Closure row-limit raised session-wide to a finite ceiling
-      // (input-proportional by design; Graft.CteRecursionRowCeiling).
-      .config("spark.sql.cteRecursionRowLimit", Graft.CteRecursionRowCeiling)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = LocalSession(Cpus)
 }

@@ -90,11 +90,7 @@ class UniquePrefixSpec extends SparkSpec {
           if (jobs.get > 3) lateBytes.addAndGet(b)
         }
     }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    val got =
-      try { val r = UniquePrefix.iterative(spark, lines); ListenerBusDrain.drain(sc); r }
-      finally sc.removeSparkListener(listener)
+    val got = ListenerBusDrain.observe(sc, listener)(UniquePrefix.iterative(spark, lines))
     assert(got === Some(9))
     assert(jobs.get <= 9 + 3, s"${jobs.get} jobs")
     assert(bytes.get > 0 && lateBytes.get === 0L,

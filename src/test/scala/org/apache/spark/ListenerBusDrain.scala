@@ -1,7 +1,16 @@
 package org.apache.spark
 
-/** Lets a test wait until the listener bus has delivered every queued
-  * event, so a listener has seen all jobs of the action it counts. */
+import org.apache.spark.scheduler.SparkListenerInterface
+
+/** Lets a test listen to exactly the events of one action: the listener
+  * bus is drained before the listener is added, and again before it is
+  * removed, so the listener has seen every job of the action it counts and
+  * none from before it. */
 object ListenerBusDrain {
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  def observe[T](sc: SparkContext, listener: SparkListenerInterface)(body: => T): T = {
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try { val r = body; sc.listenerBus.waitUntilEmpty(); r }
+    finally sc.removeSparkListener(listener)
+  }
 }
