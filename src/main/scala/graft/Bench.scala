@@ -165,13 +165,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    // SPARK_GRAFT_BENCH_GC=1 enables an untimed System.gc() between
-    // queries. Default OFF: a 3×-interleaved A/B on an 18-query subset
-    // measured GC-on at 25.7/63.6/22.7 s vs GC-off at 23.0/22.4/20.5 s —
-    // the forced full GCs add jitter here and never helped the bench,
-    // unlike ScaleSmoke, whose heavyweight K× checkpoint fixtures DO need
-    // the between-op GC (PERF.md round-8 hygiene notes).
-    val gcBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "0") == "1"
     val warmupPerQuery = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
     // Extra samples taken when a query's initial samples spread >2.5× (stall
     // suspicion); 0 disables the defense and restores pure median-of-`runs`.
@@ -214,13 +207,7 @@ object Bench {
       dt
     }
 
-    /** `runs` back-to-back samples; stops at the first failure. The
-      * untimed GC between queries lets ContextCleaner reclaim the
-      * localCheckpoint blocks iterative queries (components, PageRank,
-      * capped joins) leave in the block manager — without it, hundreds of
-      * timed executions accumulate dead blocks whose memory pressure
-      * surfaces as the "warm runs slower than cold" profile r7 measured
-      * on q89 (PERF.md). */
+    /** `runs` back-to-back samples; stops at the first failure. */
     // A failed query returns Seq.empty — NOT a -1.0 sentinel sample, so
     // failures are unmistakable (null in bench_samples.json, -1.0 only in
     // the stdout median, the driver's documented failure encoding).
@@ -299,7 +286,6 @@ object Bench {
       // providers are loaded, and the next streaming query re-loads
       // lazily). Part of the r11 q141–q145 positional-elevation fix.
       org.apache.spark.sql.GraftStateStoreAccess.unloadAll()
-      if (gcBetween) System.gc()
       (samples, fired)
     }
 

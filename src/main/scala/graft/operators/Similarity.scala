@@ -923,7 +923,7 @@ object Similarity {
     // query stays corpus-LINEAR at the tier — the first % 100-only cut
     // (anchors ∝ corpus) priced quadratic, 12.2x for 10x data, and was
     // redesigned before shipping (the q226 lesson, caught by the
-    // TierCoverage same-commit rule).
+    // coverage ledger's same-commit tier-row rule).
     "q229_hard_negatives" -> ((s, d) =>
       hardNegatives(Tables.embeddings(s, d), "vec_id", "embedding", "label",
         pmod(col("vec_id"), lit(100)) === 0 && col("vec_id") < 500, k = 5)

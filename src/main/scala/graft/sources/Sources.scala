@@ -16,14 +16,7 @@ object Sources {
     * don't accumulate one orphan /tmp/graft_* dir per query invocation. */
   private lazy val stagingRoot: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_staging_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
+    graft.LocalSession.deleteAtExit(p)
     p
   }
 

@@ -24,18 +24,22 @@ import org.apache.spark.sql.functions._
   *   - `documents.text` is perturbed per copy (a per-copy `translate`
   *     permutation over ten high-frequency letters — length-preserving, so
   *     `n_chars` stays consistent) and `embeddings.embedding` is rotated by
-  *     c positions (norm-preserving). Unperturbed replication would make
-  *     every document/vector a K-sized EXACT-duplicate cluster — the
-  *     adversarial regime `ScaleSmoke` measures on purpose — whereas a real
-  *     larger corpus is mostly NEW content; the tier models growth, the
-  *     smoke models pathology. Cross-copy token/shingle overlap after
-  *     translation is near zero, so pair-output-bound operators (q159's
-  *     exact set-similarity join) grow ~K×, not K²×.
+  *     c positions (norm-preserving). A real larger corpus is mostly NEW
+  *     content, so the tier models growth: cross-copy token/shingle overlap
+  *     after translation is near zero, and pair-output-bound operators
+  *     (q159's exact set-similarity join) grow ~K×, not K²×.
+  *   - `SPARK_GRAFT_TIER_DUP=1` writes the dup tier instead: the same K
+  *     key-shifted copies with no perturbation, so every document and
+  *     vector becomes a K-sized EXACT-duplicate cluster. That is the
+  *     adversarial regime the dedup/LSH scale guards exist for; a query's
+  *     dup row over its tier row (same K, same data size) isolates the
+  *     exact-duplicate pathology.
   *
   * Run:
   *   sbt "runMain graft.tools.ScaleTier"            # /tmp/graft_sf1, K=10
   *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 SPARK_GRAFT_RUNS=1 \
   *     sbt "runMain graft.Bench"                    # the tier bench row
+  *   SPARK_GRAFT_TIER_DUP=1 sbt "runMain graft.tools.ScaleTier"  # /tmp/graft_dup
   * Results recorded in PERF.md; measurement infrastructure, not part of the
   * driver contract.
   */
@@ -67,9 +71,44 @@ object ScaleTier {
   private[graft] val targets: Seq[String] =
     classBases.flatMap(base => (0 until 10).map(c => base.drop(c) + base.take(c)))
 
+  // Shared offsets keep FKs consistent: the custkey shift used by
+  // `customer` MUST equal the one used by `orders.o_custkey`, etc.
+  val CUST = 1000000L; val ORD = 100000000L; val PART = 1000000L
+  val SUPP = 1000000L; val EV = 100000000L; val USER = 1000000L
+  val DOC = 1000000L; val VEC = 1000000L
+
+  /** K copies of `df`, copy c adding c × offset to each key column (copy 0
+    * unshifted), with an optional per-copy column rewrite applied last. */
+  def replicate(df: DataFrame, k: Int, offsets: Map[String, Long],
+                perturb: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
+    (0 until k).map { c =>
+      val shifted = offsets.foldLeft(df) { case (d, (col0, off)) =>
+        d.withColumn(col0, col(col0) + lit(c * off))
+      }
+      perturb(shifted, c)
+    }.reduce(_ unionByName _)
+
+  /** K copies of `documents`; unless `dup`, copy c ≥ 1 translates its text
+    * with target c. */
+  def documents(df: DataFrame, k: Int, dup: Boolean): DataFrame =
+    replicate(df, k, Map("doc_id" -> DOC), perturb = (d, c) =>
+      if (dup || c == 0) d
+      else d.withColumn("text", translate(col("text"), alpha, targets(c))))
+
+  /** K copies of `embeddings`; unless `dup`, copy c ≥ 1 rotates its vector
+    * by c positions. */
+  def embeddings(df: DataFrame, k: Int, dup: Boolean): DataFrame =
+    replicate(df, k, Map("vec_id" -> VEC), perturb = (d, c) =>
+      if (dup || c == 0) d
+      else d.withColumn("embedding", expr(
+        s"concat(slice(embedding, ${c + 1}, size(embedding) - $c), " +
+          s"slice(embedding, 1, $c))")))
+
   def main(args: Array[String]): Unit = {
+    val dup = sys.env.getOrElse("SPARK_GRAFT_TIER_DUP", "0") == "1"
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_TIER_OUT", "/tmp/graft_sf1")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_TIER_OUT",
+      if (dup) "/tmp/graft_dup" else "/tmp/graft_sf1")
     val k = sys.env.getOrElse("SPARK_GRAFT_TIER_K", "10").toInt
     require(1 <= k && k <= targets.size,
       s"tier K=$k out of range: need 1 <= K <= ${targets.size} (that many " +
@@ -81,17 +120,6 @@ object ScaleTier {
 
     def src(name: String): DataFrame = graft.Tables.load(spark, srcDir, name)
 
-    /** K copies of `df`, copy c adding `offsets` to its key columns (copy 0
-      * unshifted), with an optional per-copy column rewrite applied last. */
-    def replicate(df: DataFrame, offsets: Map[String, Long],
-                  perturb: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
-      (0 until k).map { c =>
-        val shifted = offsets.foldLeft(df) { case (d, (col0, off)) =>
-          d.withColumn(col0, col(col0) + lit(c * off))
-        }
-        perturb(shifted, c)
-      }.reduce(_ unionByName _)
-
     def write(name: String, df: DataFrame, files: Int): Unit = {
       val t0 = System.nanoTime()
       df.repartition(files)
@@ -100,35 +128,21 @@ object ScaleTier {
       println(f"[tier] $name%-12s $n%9d rows  ${(System.nanoTime() - t0) / 1e9}%6.1fs")
     }
 
-    // Shared offsets keep FKs consistent: the custkey shift used by
-    // `customer` MUST equal the one used by `orders.o_custkey`, etc.
-    val CUST = 1000000L; val ORD = 100000000L; val PART = 1000000L
-    val SUPP = 1000000L; val EV = 100000000L; val USER = 1000000L
-    val DOC = 1000000L; val VEC = 1000000L
-
     write("region", src("region"), 1)
     write("nation", src("nation"), 1)
-    write("customer", replicate(src("customer"), Map("c_custkey" -> CUST)), 2)
-    write("supplier", replicate(src("supplier"), Map("s_suppkey" -> SUPP)), 1)
-    write("part", replicate(src("part"), Map("p_partkey" -> PART)), 2)
-    write("orders", replicate(src("orders"),
+    write("customer", replicate(src("customer"), k, Map("c_custkey" -> CUST)), 2)
+    write("supplier", replicate(src("supplier"), k, Map("s_suppkey" -> SUPP)), 1)
+    write("part", replicate(src("part"), k, Map("p_partkey" -> PART)), 2)
+    write("orders", replicate(src("orders"), k,
       Map("o_orderkey" -> ORD, "o_custkey" -> CUST)), 4)
-    write("lineitem", replicate(src("lineitem"),
+    write("lineitem", replicate(src("lineitem"), k,
       Map("l_orderkey" -> ORD, "l_partkey" -> PART, "l_suppkey" -> SUPP)), 8)
-    write("events", replicate(src("events"),
+    write("events", replicate(src("events"), k,
       Map("event_id" -> EV, "user_id" -> USER)), 8)
-    write("documents", replicate(src("documents"), Map("doc_id" -> DOC),
-      perturb = (d, c) =>
-        if (c == 0) d
-        else d.withColumn("text", translate(col("text"), alpha, targets(c)))), 4)
-    write("embeddings", replicate(src("embeddings"), Map("vec_id" -> VEC),
-      perturb = (d, c) =>
-        if (c == 0) d
-        else d.withColumn("embedding", expr(
-          s"concat(slice(embedding, ${c + 1}, size(embedding) - $c), " +
-            s"slice(embedding, 1, $c))"))), 1)
+    write("documents", documents(src("documents"), k, dup), 4)
+    write("embeddings", embeddings(src("embeddings"), k, dup), 1)
 
-    println(s"[tier] wrote ${k}x tier of $srcDir -> $outDir")
+    println(s"[tier] wrote ${k}x ${if (dup) "dup " else ""}tier of $srcDir -> $outDir")
     spark.stop()
   }
 }

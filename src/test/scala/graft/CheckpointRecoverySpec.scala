@@ -15,7 +15,7 @@ class CheckpointRecoverySpec extends SparkSpec {
   import spark.implicits._
 
   test("checkpointed file sink resumes from committed offsets: no duplicates, no holes, idempotent re-start") {
-    val root = Files.createTempDirectory("graft_ckpt_spec")
+    val root = TempDirs.dir("graft_ckpt_spec")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     // Three single-row-group files with pinned increasing mtimes so the
     // file source lists them deterministically, one per micro-batch.

@@ -1,52 +1,102 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.CoverageLedger._
 
-/** COVERAGE.md ledger gate (round 17, VERDICT r16 item 2).
+/** The per-query coverage gate (`tools/CoverageLedger.scala`): every query
+  * owes a dup-tier row, a 10× tier row, a 30× probe when obliged, a passing
+  * sf0.1 oracle row whose plan pin matches its golden plan, and a COVERAGE.md
+  * mention — or a documented exemption. A query added without its rows
+  * fails here in the same commit.
   *
-  * COVERAGE.md is the operator→query→check ledger the verdict audits
-  * from, and it has drifted silently FIVE separate times (r13 SURVEY
-  * rows, r15 bench target, r16's q227–q231 — plus q36/q37, which had no
-  * row at all until this spec's first run found them): the new-query
-  * checklist says "COVERAGE row" and nothing enforced it. Same pattern as
-  * Smoke/Tier/Sf01Coverage: every `SparkEntry.queries` name must appear
-  * VERBATIM (full `qNNN_name` form) somewhere in COVERAGE.md, or carry a
-  * documented exemption here.
-  *
-  * Substring containment, not table parsing: the ledger is prose-shaped
-  * (three different table layouts plus inline mentions), and the failure
-  * mode this gate exists for is a missing NAME, not a malformed row.
+  * No SparkSession: the gate reads the queries map's keys and the committed
+  * records.
   */
 class CoverageLedgerSpec extends AnyFunSuite {
 
-  private val ledgerPath = "COVERAGE.md"
+  private val qs = SparkEntry.queries.keySet
+  private lazy val records = committed()
 
-  /** query -> reason no COVERAGE.md row is required. Empty today: all 288
-    * queries have rows. Any future entry must argue the STRUCTURAL
-    * reason, as in SmokeCoverage/TierCoverage/Sf01Coverage. */
-  private val exempt: Map[String, String] = Map.empty
-
-  private lazy val text = new String(
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(ledgerPath)),
-    "UTF-8")
-
-  test("every query appears verbatim in COVERAGE.md or is documented exempt") {
-    val missing = SparkEntry.queries.keySet
-      .filterNot(n => text.contains(n) || exempt.contains(n))
-    assert(missing.isEmpty,
-      s"queries with NO COVERAGE.md mention and NO documented exemption " +
-        s"(add the ledger row in the same commit as the query): " +
-        s"${missing.toSeq.sorted.mkString(", ")}")
+  test("every query meets every obligation or carries a documented exemption") {
+    val owed = missing(qs, records) -- exempt.keySet
+    assert(owed.isEmpty,
+      "rows owed and missing, with no exemption (recipes in the " +
+        "CoverageLedger scaladoc): " + owed.groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (o, ps) => s"$o: ${ps.map(_._2).toSeq.sorted.mkString(", ")}" }
+          .mkString("; "))
   }
 
   test("no stale or overlapping exemptions") {
-    val staleEx = exempt.keySet -- SparkEntry.queries.keySet
-    assert(staleEx.isEmpty,
-      s"exempt entries for queries that no longer exist: " +
-        s"${staleEx.toSeq.sorted.mkString(", ")}")
+    val bad = exempt.keySet.filterNot { case (o, q) =>
+      obligations.contains(o) && qs.contains(q)
+    }
+    assert(bad.isEmpty, s"exemptions for unknown obligations or deleted queries: $bad")
+    val both = exempt.keySet -- missing(qs, records)
+    assert(both.isEmpty, s"exempt rows that the records already hold (drop the exemption): $both")
     val thin = exempt.filter(_._2.trim.length < 40).keys
-    assert(thin.isEmpty,
-      s"exemption reasons too thin to count as documented: " +
-        s"${thin.toSeq.sorted.mkString(", ")}")
+    assert(thin.isEmpty, s"exemption reasons too thin to count as documented: $thin")
+  }
+
+  test("no record rows for queries that no longer exist") {
+    val rows = stale(qs, records)
+    assert(rows.isEmpty, s"(record, key) rows naming deleted queries: $rows")
+  }
+
+  test("30x probe rows are sane and the cost-leader seeds are present") {
+    for (q <- Seq("q159", "q167", "q193", "q194", "q218", "q226"))
+      assert(records.tier30.contains(q), s"seed probe row $q missing")
+    for ((q, (t10, t30)) <- records.tier30) {
+      assert(t10 > 0 && t30 > 0, s"$q: non-positive probe sample")
+      // 3x data: a slope at the quadratic 9x signature is a defect to fix,
+      // not a row to commit
+      assert(t30 / t10 < 9.0, s"$q: slope ${t30 / t10} for 3x data")
+    }
+  }
+
+  test("the 30x obligation rule boundary (pure)") {
+    val floors = Map("qa" -> 1.0, "qb" -> 1.0, "qc" -> 2.0)
+    // qa: expensive and 6x -> obliged. qb: 4.9 s misses the seconds guard
+    // even at 4.9x. qc: 6 s at exactly 3.0x -> obliged (inclusive). qd has
+    // no floor and never obliges.
+    val tier = Map("qa" -> 6.0, "qb" -> 4.9, "qc" -> 6.0, "qd" -> 100.0)
+    assert(obliged(tier, floors) == Set("qa", "qc"))
+    assert(obliged(Map("qe" -> 9.0), Map("qe" -> 0.0)).isEmpty)
+  }
+
+  test("removing any one owed row fails the ledger (pure)") {
+    val q = "q1_op"
+    val full = Records(
+      dup = Map("q1" -> 2.0), tier = Map("q1" -> 9.0),
+      tier30 = Map("q1" -> (9.0, 20.0)), sf01Floors = Map("q1" -> 1.0),
+      sf01Pass = Set(q), certPlans = Map(q -> "Scan|>Agg"),
+      goldenPlans = Map(q -> "Scan|>Agg"), coverage = s"| $q | row |")
+    assert(missing(Set(q), full).isEmpty)
+    val planted = Seq(
+      Dup -> full.copy(dup = Map.empty),
+      Tier -> full.copy(tier = Map.empty),
+      Tier30 -> full.copy(tier30 = Map.empty),
+      Sf01 -> full.copy(sf01Pass = Set.empty),
+      CertPin -> full.copy(certPlans = Map.empty),
+      CertPin -> full.copy(goldenPlans = Map(q -> "Scan|>Exchange|>>Agg")),
+      Coverage -> full.copy(coverage = "| q1_other | row |"))
+    for ((o, r) <- planted) assert(missing(Set(q), r) == Set(o -> q), o)
+    // a cheap query owes no probe
+    assert(missing(Set(q), full.copy(tier = Map("q1" -> 2.0), tier30 = Map.empty)).isEmpty)
+    assert(planted.map(_._1).distinct == obligations)
+  }
+
+  test("records parse with a JSON reader and fail loudly when malformed (pure)") {
+    assert(seconds("""{"metric":"total","queries":{"q1":1.5,"q2":-1.0}}""") ==
+      Map("q1" -> 1.5))
+    assert(probes("""{"queries":{"q1":[6.2,12.5]}}""") == Map("q1" -> (6.2, 12.5)))
+    assert(passing("""{"queries":{"q1_a":{"rows":3,"pass":true},"q2_b":{"pass":false}}}""") ==
+      Set("q1_a"))
+    assert(floors("""{"sf":"/d/sf0.1","queries":{"q1_a":[0.9,0.7],"q2_b":null}}""") ==
+      Map("q1" -> 0.7))
+    intercept[Exception](seconds("""{"queries":{"q1":1.5"""))
+    intercept[IllegalArgumentException](seconds("""{"queries":{"q1":"1.5"}}"""))
+    intercept[IllegalArgumentException](probes("""{"queries":{"q1":[6.2]}}"""))
+    intercept[IllegalArgumentException](floors("""{"sf":"/d/sf1","queries":{}}"""))
+    intercept[IllegalArgumentException](passing("""{"n_pass":288}"""))
   }
 }

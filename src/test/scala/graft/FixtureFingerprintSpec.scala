@@ -12,10 +12,10 @@ import java.nio.file.Files
   * stale staging dir gets served for regenerated data.
   */
 class FixtureFingerprintSpec extends AnyFunSuite {
-  private def tmpDir() = Files.createTempDirectory("graft_fp_spec")
+  private def tmpDir() = TempDirs.dir("graft_fp_spec")
 
   test("single file: digest is the raw-bytes md5 (staged dirs from the pre-helper era stay valid)") {
-    val f = Files.createTempFile("graft_fp", ".bin")
+    val f = TempDirs.file("graft_fp", ".bin")
     Files.write(f, "hello graft".getBytes("UTF-8"))
     val (size, md5) = Tables.fixtureFingerprint(f)
     val expected = java.security.MessageDigest.getInstance("MD5")

@@ -66,7 +66,7 @@ class FixtureInvariantSpec extends SparkSpec {
     import spark.implicits._
     val us = 1700000000123456L // µs since epoch, sub-ms precision on purpose
     def stage(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_evfix").toString
+      val dir = TempDirs.dir("graft_evfix").toString
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
     }

@@ -18,7 +18,7 @@ class IdempotentSinkSpec extends SparkSpec {
       .map(_.toString).toSeq
 
   test("drained parquet == batch aggregation; redelivered batch is skipped") {
-    val out = Files.createTempDirectory("graft_sink_").toString
+    val out = TempDirs.dir("graft_sink_").toString
     StreamingQueries.sinkTumblingToParquet(spark, sf0001, out)
 
     val dirs = batchDirs(out)

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Proves the IVF scale claim end-to-end rather than asserting it in prose:
   * over a label-partitioned parquet layout, the probe join prunes the
@@ -14,7 +13,7 @@ import java.nio.file.Files
 class IvfPruningSpec extends SparkSpec {
 
   private lazy val partitionedDir: String = {
-    val tmp = Files.createTempDirectory("graft_ivf_part_").toString
+    val tmp = TempDirs.dir("graft_ivf_part_").toString
     Tables.embeddings(spark, sf0001).write.mode("overwrite")
       .partitionBy("label").parquet(tmp)
     tmp

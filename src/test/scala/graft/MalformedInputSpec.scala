@@ -34,7 +34,7 @@ class MalformedInputSpec extends SparkSpec {
   }
 
   test("csv PERMISSIVE nulls bad cells; FAILFAST throws") {
-    val dir = Files.createTempDirectory("graft_badcsv")
+    val dir = TempDirs.dir("graft_badcsv")
     Files.writeString(dir.resolve("x.csv"), "1,a\nnot_a_number,b\n3,c\n")
     val schema = "id LONG, name STRING"
     val permissive = spark.read.schema(schema).option("mode", "PERMISSIVE")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Hive-style partitioned layout + partition pruning: at 100 TB the fact
   * tables are date-partitioned and a year filter must prune directories at
@@ -9,7 +8,7 @@ import java.nio.file.Files
 class PartitionPruningSpec extends SparkSpec {
 
   test("year filter prunes partitions of a partitioned parquet table") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TempDirs.dir("graft_part").toString
     Tables.orders(spark, sf0001)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.ScaleTier
 
 /** Invariants of the sf1-tier generator's per-copy text perturbation
@@ -8,9 +7,10 @@ import graft.tools.ScaleTier
   * distinct targets make cross-copy token sets disjoint (pair-output-bound
   * joins grow ~K×, not K²×), and permutation targets keep `translate`
   * length-preserving so the fixture's `n_chars == length(text)` invariant
-  * survives replication.
+  * survives replication. The dup tier skips the perturbation, so there
+  * every copy repeats copy 0's content under shifted ids.
   */
-class ScaleTierSpec extends AnyFunSuite {
+class ScaleTierSpec extends SparkSpec {
   test("copy 0 is the identity target (literal predicates keep original rows)") {
     assert(ScaleTier.targets.head == ScaleTier.alpha)
   }
@@ -49,6 +49,37 @@ class ScaleTierSpec extends AnyFunSuite {
         assert(agree == 0, s"targets $i/$j agree on $agree positions — rotations of distinct shift never coincide")
       else
         assert(agree <= 2, s"cross-class targets $i/$j agree on $agree positions — exceeds the searched floor")
+    }
+  }
+
+  test("dup copies repeat copy 0 under shifted ids; tier copies 1-2 differ (K=3)") {
+    import spark.implicits._
+    val docs = Seq((1L, "the quick brown fox"), (2L, "lorem ipsum dolor")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Seq(1.0, 2.0, 3.0, 4.0)), (2L, Seq(0.5, 0.0, -1.0, 2.0)))
+      .toDF("vec_id", "embedding")
+    val baseDocs = docs.as[(Long, String)].collect().toMap
+    val baseVecs = vecs.as[(Long, Seq[Double])].collect().toMap
+    /** copy -> (copy-0 id -> content), with the copy read off the id offset. */
+    def copies[T](rows: Array[(Long, T)], off: Long): Map[Long, Map[Long, T]] =
+      rows.groupBy(_._1 / off).map { case (c, rs) =>
+        c -> rs.map { case (id, v) => (id - c * off) -> v }.toMap
+      }
+    def docCopies(dup: Boolean) =
+      copies(ScaleTier.documents(docs, 3, dup).as[(Long, String)].collect(), ScaleTier.DOC)
+    def vecCopies(dup: Boolean) =
+      copies(ScaleTier.embeddings(vecs, 3, dup).as[(Long, Seq[Double])].collect(), ScaleTier.VEC)
+
+    assert(docCopies(dup = true) == (0L to 2L).map(_ -> baseDocs).toMap)
+    assert(vecCopies(dup = true) == (0L to 2L).map(_ -> baseVecs).toMap)
+
+    val d = docCopies(dup = false)
+    val v = vecCopies(dup = false)
+    assert(d.keySet == Set(0L, 1L, 2L) && v.keySet == Set(0L, 1L, 2L))
+    assert(d(0L) == baseDocs && v(0L) == baseVecs)
+    for (c <- Seq(1L, 2L); id <- Seq(1L, 2L)) {
+      assert(d(c)(id) != baseDocs(id), s"copy $c doc $id text unperturbed")
+      assert(d(c)(id).length == baseDocs(id).length)
+      assert(v(c)(id) != baseVecs(id), s"copy $c vec $id unrotated")
     }
   }
 }

@@ -2,14 +2,13 @@ package graft
 
 import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
-import java.nio.file.Files
 
 /** Lossless round-trips through every standard format (SURVEY §2.2 scans/
   * sinks): csv and json (schema-forced read), orc and parquet (self-
   * describing, incl. nested arrays), text (reference line-file parity). */
 class SourcesSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_sources").toString
+  private lazy val tmp = TempDirs.dir("graft_sources").toString
 
   private def sortedRows(df: DataFrame): Array[String] =
     df.collect().map(_.toString).sorted

@@ -52,7 +52,7 @@ class StreamStagingSpec extends SparkSpec {
     // multi-part Spark write (plus its _SUCCESS marker, which must NOT
     // be linked as data).
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_dirfix")
+    val root = TempDirs.dir("graft_dirfix")
     spark.range(0, 1000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(3)
       .write.mode("overwrite").parquet(s"$root/events.parquet")
