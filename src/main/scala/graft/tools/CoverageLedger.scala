@@ -19,7 +19,10 @@ import scala.jdk.CollectionConverters._
   *     re-certification shows;
   *   - `coverage`: the full query name somewhere in COVERAGE.md.
   *
-  * `CoverageLedgerSpec` requires [[missing]] ⊆ [[exempt]]'s keys. Recipes:
+  * The ledger specs require [[missing]] ⊆ [[exempt]]'s keys, one record
+  * each: `SmokeCoverageSpec` (dup), `TierCoverageSpec`, `Tier30CoverageSpec`,
+  * `Sf01CoverageSpec` (sf01, cert_pin) and `CoverageLedgerSpec` (coverage).
+  * Recipes:
   *   - dup/tier: `SPARK_GRAFT_SF_DIR=<tier dir> SPARK_GRAFT_RUNS=1
   *     SPARK_GRAFT_ONLY=<names> sbt "runMain graft.Bench"`, then merge the
   *     stdout record's rows;

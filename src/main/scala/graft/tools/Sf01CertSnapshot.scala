@@ -5,7 +5,7 @@ package graft.tools
   * at bench scale (round 17, VERDICT r16 item 7).
   *
   * The snapshot pins, for every sf0.1-certified query, the sf0.001 golden
-  * plan fingerprint AS OF certification time; CoverageLedgerSpec fails
+  * plan fingerprint AS OF certification time; Sf01CoverageSpec fails
   * when a certified query's current `golden_plans.txt` entry no longer
   * matches it — i.e. the plan changed in a commit without a same-commit
   * re-certification. The fix is never "run this tool": it is

@@ -1,92 +1,45 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.Sf01Coverage
+import graft.LedgerChecks._
+import graft.tools.CoverageLedger.{CertPin, Sf01}
 
-/** Bench-scale correctness-coverage gate (round 16).
-  *
-  * The sf0.1 oracle record's first run caught three real divergences the
-  * sf0.01 gate had masked for four rounds; this spec keeps the record
-  * current: every `SparkEntry.queries` name must have a PASSING entry in
-  * the committed `CORRECTNESS_SF01.json` or a documented
-  * `Sf01Coverage.exempt` reason. A new query fails `sbt test` until its
-  * sf0.1 certification is merged in the same commit (see the
-  * Sf01Coverage scaladoc for the one-query recipe).
-  *
-  * No SparkSession needed — the gate reads the queries map's keys and the
-  * committed record file.
+/** The ledger's `sf01` and `cert_pin` obligations: every query owes a
+  * passing row in `CORRECTNESS_SF01.json`, the sf0.1 oracle record, and a
+  * `sf01_cert_plans.txt` pin equal to its `golden_plans.txt` fingerprint, or
+  * a documented exemption. A certification certifies the answers of one
+  * plan, so a plan change fails here until the query is re-certified at
+  * sf0.1 and re-pinned (`Sf01CertSnapshot`: re-certify first, then pin).
   */
 class Sf01CoverageSpec extends AnyFunSuite {
 
-  private val qs = SparkEntry.queries.keySet
-  private lazy val passing = Sf01Coverage.passing()
-  private val ex = Sf01Coverage.exempt.keySet
-
   test("every query is certified green at sf0.1 or carries a documented exemption") {
-    val missing = qs.filterNot(n => passing.contains(n) || ex.contains(n))
-    assert(missing.isEmpty,
-      s"queries with NO passing CORRECTNESS_SF01.json entry and NO " +
-        s"documented exemption (certify at sf0.1 per the Sf01Coverage " +
-        s"scaladoc and merge the row, or add a substantive exempt " +
-        s"reason): ${missing.toSeq.sorted.mkString(", ")}")
+    val owed = unmet(Sf01)
+    assert(owed.isEmpty, s"queries with NO passing CORRECTNESS_SF01.json row " +
+      s"and NO documented exemption ($recipe): ${show(owed)}")
   }
 
   test("the record parses and is plausibly complete") {
-    assert(passing.size >= 200,
-      s"CORRECTNESS_SF01.json parsed only ${passing.size} passing rows — " +
-        s"record truncated or format drifted?")
+    assert(records.sf01Pass.size >= 200, s"CORRECTNESS_SF01.json parsed only " +
+      s"${records.sf01Pass.size} passing rows — record truncated or format drifted?")
   }
 
   test("no stale record entries or stale/overlapping exemptions") {
-    val stale = passing -- qs
-    assert(stale.isEmpty,
-      s"CORRECTNESS_SF01.json entries for queries that no longer exist " +
-        s"(prune the record): ${stale.toSeq.sorted.mkString(", ")}")
-    val staleEx = ex -- qs
-    assert(staleEx.isEmpty,
-      s"Sf01Coverage.exempt entries for queries that no longer exist: " +
-        s"${staleEx.toSeq.sorted.mkString(", ")}")
-    val both = ex.filter(passing.contains)
-    assert(both.isEmpty,
-      s"queries BOTH certified and exempt (drop the exemption): " +
-        s"${both.toSeq.sorted.mkString(", ")}")
-    val thin = Sf01Coverage.exempt.filter(_._2.trim.length < 40).keys
-    assert(thin.isEmpty,
-      s"exemption reasons too thin to count as documented: " +
-        s"${thin.toSeq.sorted.mkString(", ")}")
+    val rows = staleRows(Sf01, CertPin) ++ deadExemptions(Sf01, CertPin)
+    assert(rows.isEmpty, s"oracle rows, plan pins or exemptions for queries " +
+      s"that no longer exist (prune them): ${show(rows)}")
+    val both = heldExemptions(Sf01, CertPin)
+    assert(both.isEmpty, s"queries BOTH certified and exempt (drop the " +
+      s"exemption): ${show(both)}")
+    val thin = thinExemptions(Sf01, CertPin)
+    assert(thin.isEmpty, s"exemption reasons too thin to count as documented: " +
+      show(thin))
   }
-
-  // ---- certification freshness (round 17, VERDICT r16 item 7) ----
 
   test("no certified query's plan changed since its sf0.1 certification") {
-    // A certification certifies the ANSWERS of a specific plan.
-    // sf01_cert_plans.txt pins each certified query's golden fingerprint
-    // at cert time; a golden_plans.txt regen that changes a certified
-    // query therefore fails HERE until the query is re-certified at
-    // sf0.1 and re-pinned (Sf01CertSnapshot scaladoc — re-certify FIRST,
-    // then pin, same commit). This makes r16's by-hand rule (q49/q193/
-    // q194 were re-certified after their rewrites) mechanical.
-    val stale = Sf01Coverage.staleCertifications(
-      passing.intersect(qs),
-      GoldenFiles.load("/sf01_cert_plans.txt"),
-      GoldenFiles.load("/golden_plans.txt"))
-    assert(stale.isEmpty,
-      s"plan fingerprint changed since sf0.1 certification — re-certify " +
-        s"at sf0.1 (Sf01Coverage scaladoc recipe), merge the " +
-        s"CORRECTNESS_SF01.json row, then pin via `sbt \"runMain " +
-        s"graft.tools.Sf01CertSnapshot <name>\"` in the same commit: " +
-        s"${stale.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("forced plan change without re-certification is caught (unit case)") {
-    val certified = Set("qA", "qB", "qC")
-    val certPlans = Map("qA" -> "Scan|>Agg", "qB" -> "Scan|>Sort")
-    // qA unchanged; qB's current golden drifted; qC never pinned at all.
-    val golden = Map("qA" -> "Scan|>Agg", "qB" -> "Scan|>Exchange|>>Sort",
-      "qC" -> "Scan")
-    assert(Sf01Coverage.staleCertifications(certified, certPlans, golden) ==
-      Set("qB", "qC"))
-    // and the clean state passes
-    assert(Sf01Coverage.staleCertifications(Set("qA"), certPlans, golden).isEmpty)
+    val owed = unmet(CertPin)
+    assert(owed.isEmpty, s"queries whose golden plan differs from (or has no) " +
+      s"sf0.1 certification pin: re-certify at sf0.1, then re-pin ($recipe): " +
+      show(owed))
   }
 }

@@ -1,74 +1,42 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.SmokeCoverage
+import graft.LedgerChecks._
+import graft.tools.CoverageLedger.Dup
 
-/** Scale-smoke coverage gate (round 13, VERDICT r12 item 3).
-  *
-  * Rounds 11 and 12 both shipped operator batches without 20× ScaleSmoke
-  * profiles — the gap recurred because nothing failed when it happened.
-  * This spec makes the gap loud: every `SparkEntry.queries` name must be
-  * either `SmokeCoverage.covered` (naming its ScaleSmoke section) or
-  * `SmokeCoverage.exempt` (with a substantive documented reason). Adding
-  * a query without deciding its scale story fails `sbt test`.
-  *
-  * No SparkSession needed — the queries map's KEYS are static.
+/** The ledger's `dup` obligation: every query owes a non-failed row in
+  * `dup_out.json`, the Bench record on the K=10 exact-duplicate tier, or a
+  * documented exemption. A covered entry is a dup row; an exempt one is a
+  * `(dup, query)` key of `CoverageLedger.exempt`.
   */
 class SmokeCoverageSpec extends AnyFunSuite {
 
-  private val qs = SparkEntry.queries.keySet
-  private val cov = SmokeCoverage.covered.keySet
-  private val ex = SmokeCoverage.exempt.keySet
-
   test("covered and exempt are disjoint") {
-    val both = cov intersect ex
-    assert(both.isEmpty,
-      s"queries listed as BOTH covered and exempt: ${both.toSeq.sorted.mkString(", ")}")
+    val both = heldExemptions(Dup)
+    assert(both.isEmpty, s"queries with BOTH a dup row and a dup exemption " +
+      s"(drop the exemption): ${show(both)}")
   }
 
   test("every query is smoke-covered or documented-exempt") {
-    val missing = qs -- cov -- ex
-    assert(missing.isEmpty,
-      s"queries with NO scale-smoke entry and NO documented exemption " +
-        s"(add a ScaleSmoke 1x/Kx row + SmokeCoverage.covered entry, or a " +
-        s"substantive SmokeCoverage.exempt reason): " +
-        s"${missing.toSeq.sorted.mkString(", ")}")
+    val owed = unmet(Dup)
+    assert(owed.isEmpty, s"queries with NO dup_out.json row and NO documented " +
+      s"exemption ($recipe): ${show(owed)}")
   }
 
   test("no stale ledger entries for deleted queries") {
-    val stale = (cov ++ ex) -- qs
-    assert(stale.isEmpty,
-      s"SmokeCoverage entries for queries that no longer exist: " +
-        s"${stale.toSeq.sorted.mkString(", ")}")
+    val rows = staleRows(Dup) ++ deadExemptions(Dup)
+    assert(rows.isEmpty, s"dup rows or exemptions for queries that no longer " +
+      s"exist: ${show(rows)}")
   }
 
   test("exemption reasons are substantive and covered entries name a section") {
-    val thinReasons = SmokeCoverage.exempt.filter(_._2.trim.length < 40).keys
-    assert(thinReasons.isEmpty,
-      s"exemption reasons too thin to count as documented: " +
-        s"${thinReasons.toSeq.sorted.mkString(", ")}")
-    val noSection = SmokeCoverage.covered.filter(!_._2.contains(":")).keys
-    assert(noSection.isEmpty,
-      s"covered entries must name their ScaleSmoke section as 'section: " +
-        s"label': ${noSection.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("covered entries point at sections that exist in ScaleSmoke.scala") {
-    // The section names in the ledger must be real `section("...")` blocks —
-    // a typo'd or deleted section would silently orphan its ledger rows.
-    val src = {
-      val p = java.nio.file.Paths.get(
-        "src/main/scala/graft/tools/ScaleSmoke.scala")
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    }
-    val sections = "section\\(\"([a-z0-9]+)\"\\)".r
-      .findAllMatchIn(src).map(_.group(1)).toSet
-    val bad = SmokeCoverage.covered.filter { case (_, v) =>
-      !sections.contains(v.takeWhile(_ != ':').trim)
-    }.keys
-    assert(bad.isEmpty,
-      s"covered entries naming nonexistent ScaleSmoke sections: " +
-        s"${bad.toSeq.sorted.mkString(", ")} (known sections: " +
-        s"${sections.toSeq.sorted.mkString(", ")})")
+    val thin = thinExemptions(Dup)
+    assert(thin.isEmpty, s"exemption reasons too thin to count as documented: " +
+      show(thin))
+    // A dup row is read against the perturbed 10x tier row of the same
+    // query at the same data size; that row is the section it names.
+    val alone = records.dup.keySet -- records.tier.keySet
+    assert(alone.isEmpty, s"dup rows with no tier_out.json row to take the " +
+      s"dup/tier ratio against: ${alone.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -1,137 +1,31 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.Tier30Coverage
+import graft.LedgerChecks._
+import graft.tools.CoverageLedger.Tier30
 
-/** 30×-probe coverage gate (round 18, VERDICT r17 item 5).
-  *
-  * The r17 probes proved the cost leaders output-bound across a second
-  * decade — but the ledger was ad-hoc, chosen by judgment. This spec
-  * makes the rule structural: every query whose committed 10× tier row
-  * is ≥ 5 s AND ≥ 3× its committed sf0.1 floor must carry a `[t10, t30]`
-  * probe row in `tier30_out.json` or a documented exemption, so the
-  * next expensive operator cannot ship without second-decade evidence
-  * (the q249 pre-commit catch, institutionalized).
-  *
-  * Basis note: the obligation reads the COMMITTED records as they are —
-  * tier rows are local[4], the sf0.1 floors whatever basis the round's
-  * record carries (32-thread driver records make floors LOWER, ratios
-  * higher, the gate stricter — safe direction). The rule is a trigger
-  * heuristic for "expensive and growing", not a measurement; the probe
-  * itself is always same-session-shape at both scales.
+/** The ledger's `tier30` obligation: a query whose 10x tier row is >= 5 s
+  * and >= 3x its sf0.1 floor (`CoverageLedger.obliged`) owes a `[t10, t30]`
+  * row in `tier30_out.json`, or a documented exemption.
   */
 class Tier30CoverageSpec extends AnyFunSuite {
 
-  private lazy val probes = Tier30Coverage.measured()
-  private lazy val tier = Tier30Coverage.tierSeconds()
-  private lazy val floors: Map[String, Double] = {
-    val text = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_samples.json")), "UTF-8")
-    assert(text.contains("\"sf\":\"/root/testdata/sf0.1\""),
-      "committed bench_samples.json is not an sf0.1 record — the " +
-        "obligation rule needs sf0.1 floors")
-    val row = """"(q[A-Za-z0-9_]+)"\s*:\s*\[([^\]]+)\]""".r
-    row.findAllMatchIn(text).flatMap { m =>
-      val vals = m.group(2).split(',').flatMap(_.trim.toDoubleOption)
-      if (vals.isEmpty) None
-      else Some(m.group(1).takeWhile(_ != '_') -> vals.min)
-    }.toMap
-  }
-
-  private lazy val exempt = Tier30Coverage.exemptions()
-
   test("every obligee carries a committed 30x probe row or a ledger exemption row") {
-    val need = Tier30Coverage.obliged(tier, floors)
-    val missing = need -- probes.keySet -- exempt.keySet
-    assert(missing.isEmpty,
-      s"queries meeting the 30x obligation rule (tier >= 5 s and >= 3x " +
-        s"the sf0.1 floor) with NO committed probe row and NO documented " +
-        s"exemption (run the two-session probe per the Tier30Coverage " +
-        s"scaladoc and merge the [t10, t30] row): " +
-        s"${missing.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("the obligation rule boundary (pure)") {
-    val floors = Map("qa" -> 1.0, "qb" -> 1.0, "qc" -> 2.0)
-    // qa: expensive and 6x -> obliged. qb: 4.9 s misses the cost guard
-    // even at 4.9x. qc: 6 s but exactly 3.0x -> obliged (inclusive).
-    val tier = Map("qa" -> 6.0, "qb" -> 4.9, "qc" -> 6.0, "qd" -> 100.0)
-    // qd has NO floor: never obliges here (the Sf01/Tier gates own it).
-    assert(Tier30Coverage.obliged(tier, floors) == Set("qa", "qc"))
-    // zero/negative floors never divide
-    assert(Tier30Coverage.obliged(Map("qe" -> 9.0), Map("qe" -> 0.0)).isEmpty)
-  }
-
-  test("probe rows are sane and the r17 seed is present") {
-    assert(probes.size >= 14,
-      s"tier30_out.json parsed only ${probes.size} rows — truncated?")
-    // the six r17 cost-leader probes must survive any rewrite
-    for (q <- Seq("q159", "q167", "q193", "q194", "q218", "q226"))
-      assert(probes.contains(q), s"r17 seed row $q missing")
-    for ((q, (t10, t30)) <- probes) {
-      assert(t10 > 0 && t30 > 0, s"$q: non-positive probe sample")
-      val slope = t30 / t10
-      // 3x data: anything at or past the quadratic 9x signature should
-      // have been caught and redesigned before entering the ledger
-      assert(slope < 9.0, s"$q: slope $slope for 3x data — quadratic " +
-        "signature committed to the ledger instead of fixed")
-    }
+    val owed = unmet(Tier30)
+    assert(owed.isEmpty, s"queries meeting the 30x obligation rule (tier >= 5 s " +
+      s"and >= 3x the sf0.1 floor) with NO committed probe row and NO " +
+      s"documented exemption ($recipe): ${show(owed)}")
   }
 
   test("no stale or overlapping exemptions") {
-    val shortQs = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
-    val staleProbe = probes.keySet -- shortQs
-    assert(staleProbe.isEmpty,
-      s"tier30_out.json rows for queries that no longer exist: " +
-        s"${staleProbe.toSeq.sorted.mkString(", ")}")
-    val ex = exempt.keySet
-    assert((ex -- shortQs).isEmpty, "exempt entries for dead queries")
-    assert(ex.intersect(probes.keySet).isEmpty,
-      "queries BOTH probed and exempt (drop the exemption)")
-    val thin = exempt.filter(_._2.trim.length < 40).keys
-    assert(thin.isEmpty, s"exemption reasons too thin: ${thin.toSeq.sorted}")
-  }
-
-  test("the exemption ledger row shape parses (pure, round 19)") {
-    // The machine-readable form of the obligation's exemption arm
-    // (VERDICT r18 item 4): a top-level "exempt" object in
-    // tier30_out.json, one "qNN": "reason" row per exemption.
-    val rec = """{"metric":"tier30","exempt":{"q42": "output is k-bounded """ +
-      """by construction; 30x input cannot grow it"},""" +
-      """"queries":{"q159":[65.05,245.09]}}"""
-    val ex = Tier30Coverage.parseExemptions(rec)
-    assert(ex == Map("q42" -> ("output is k-bounded by construction; " +
-      "30x input cannot grow it")))
-    // empty object and missing object both parse to no exemptions
-    assert(Tier30Coverage.parseExemptions("""{"exempt":{},"queries":{}}""").isEmpty)
-    assert(Tier30Coverage.parseExemptions("""{"queries":{}}""").isEmpty)
-    // ADVICE r19: reasons containing '}' or escaped quotes must parse
-    // COMPLETELY (the old regex form silently dropped later rows) ...
-    val tricky = """{"exempt":{"q1": "bounded by {k} rows; cannot grow",""" +
-      """"q2": "a \"quoted\" structural reason, forty chars min"},""" +
-      """"queries":{}}"""
-    assert(Tier30Coverage.parseExemptions(tricky) == Map(
-      "q1" -> "bounded by {k} rows; cannot grow",
-      "q2" -> "a \"quoted\" structural reason, forty chars min"))
-    // ... and malformed content must fail LOUDLY, never shrink the map
-    intercept[Exception] {
-      Tier30Coverage.parseExemptions("""{"exempt":{"q1": "unterminated""")
-    }
-    intercept[IllegalArgumentException] {
-      Tier30Coverage.parseExemptions("""{"exempt":{"notaquery": "reason"}}""")
-    }
-    intercept[IllegalArgumentException] {
-      Tier30Coverage.parseExemptions("""{"exempt":{"q1": 42}}""")
-    }
-    intercept[IllegalArgumentException] {
-      Tier30Coverage.parseExemptions("""{"exempt":[1,2]}""")
-    }
-    // the committed record must carry the object (even when empty), so
-    // the arm is visible in the ledger itself, not only in code
-    val committed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(Tier30Coverage.recordPath)), "UTF-8")
-    assert(committed.contains("\"exempt\":{"),
-      "tier30_out.json lost its exempt object — re-add it next to queries")
+    val rows = staleRows(Tier30) ++ deadExemptions(Tier30)
+    assert(rows.isEmpty, s"probe rows or exemptions for queries that no longer " +
+      s"exist: ${show(rows)}")
+    val both = heldExemptions(Tier30)
+    assert(both.isEmpty, s"exemptions for queries that are probed or not obliged " +
+      s"(drop the exemption): ${show(both)}")
+    val thin = thinExemptions(Tier30)
+    assert(thin.isEmpty, s"exemption reasons too thin to count as documented: " +
+      show(thin))
   }
 }

@@ -1,61 +1,37 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.TierCoverage
+import graft.LedgerChecks._
+import graft.tools.CoverageLedger.Tier
 
-/** 10×-tier coverage gate (round 16, VERDICT r15 item 4).
-  *
-  * The r15 tier sweep caught two real scale defects (q99's fixed
-  * recursion-row constant, q226's first-cut 37× join fan-out) that were
-  * oracle-green at sf0.01 — but only because the sweep happened to run in
-  * the same round the operators shipped. This spec removes the luck:
-  * every `SparkEntry.queries` name must have a non-failed row in the
-  * committed tier record (`tier_out.json`) or a documented
-  * `TierCoverage.exempt` reason. A new query fails `sbt test` until its
-  * tier row is merged in the same commit (see the TierCoverage scaladoc
-  * for the one-query run recipe).
-  *
-  * No SparkSession needed — the gate reads the queries map's KEYS and the
-  * committed record file.
+/** The ledger's `tier` obligation: every query owes a non-failed row in
+  * `tier_out.json`, the Bench record on the perturbed 10x tier, or a
+  * documented exemption.
   */
 class TierCoverageSpec extends AnyFunSuite {
 
-  private val qs = SparkEntry.queries.keySet
-  private def short(name: String) = name.takeWhile(_ != '_')
-  private lazy val measured = TierCoverage.measured()
-  private val ex = TierCoverage.exempt.keySet
-
   test("every query has a committed tier row or a documented exemption") {
-    val missing = qs.filterNot(n => measured.contains(short(n)) || ex.contains(n))
-    assert(missing.isEmpty,
-      s"queries with NO committed 10x tier measurement and NO documented " +
-        s"exemption (run the one-query tier bench per the TierCoverage " +
-        s"scaladoc and merge the row into tier_out.json, or add a " +
-        s"substantive TierCoverage.exempt reason): " +
-        s"${missing.toSeq.sorted.mkString(", ")}")
+    val owed = unmet(Tier)
+    assert(owed.isEmpty, s"queries with NO committed 10x tier row and NO " +
+      s"documented exemption ($recipe): ${show(owed)}")
   }
 
   test("the tier record parses and is plausibly complete") {
-    // Guards the regex-parse contract: a reformatted/truncated
-    // tier_out.json would otherwise silently shrink `measured` and the
-    // totality test's message would point at queries, not the record.
-    assert(measured.size >= 200,
-      s"tier_out.json parsed only ${measured.size} non-failed rows — " +
-        s"record truncated or format drifted?")
+    // a reformatted or truncated record shows here, not as a list of
+    // queries in the totality case
+    assert(records.tier.size >= 200, s"tier_out.json parsed only " +
+      s"${records.tier.size} non-failed rows — record truncated or format drifted?")
   }
 
   test("no stale or overlapping exemptions") {
-    val stale = ex -- qs
-    assert(stale.isEmpty,
-      s"TierCoverage.exempt entries for queries that no longer exist: " +
-        s"${stale.toSeq.sorted.mkString(", ")}")
-    val both = ex.filter(n => measured.contains(short(n)))
-    assert(both.isEmpty,
-      s"queries BOTH measured in tier_out.json and exempt (drop the " +
-        s"exemption): ${both.toSeq.sorted.mkString(", ")}")
-    val thin = TierCoverage.exempt.filter(_._2.trim.length < 40).keys
-    assert(thin.isEmpty,
-      s"exemption reasons too thin to count as documented: " +
-        s"${thin.toSeq.sorted.mkString(", ")}")
+    val rows = staleRows(Tier) ++ deadExemptions(Tier)
+    assert(rows.isEmpty, s"tier rows or exemptions for queries that no longer " +
+      s"exist: ${show(rows)}")
+    val both = heldExemptions(Tier)
+    assert(both.isEmpty, s"queries BOTH measured in tier_out.json and exempt " +
+      s"(drop the exemption): ${show(both)}")
+    val thin = thinExemptions(Tier)
+    assert(thin.isEmpty, s"exemption reasons too thin to count as documented: " +
+      show(thin))
   }
 }
