@@ -1006,12 +1006,10 @@ object Analytics {
     * corpus window sort this repo bans (the first cut priced 6.75× for
     * 10× data on exactly that skew). Instead: the corpus collapses ONCE
     * to distinct (grp, x, y) cells, each side's value frame gets its
-    * doubled ranks via q184's two-level prefix sums (⌊v⌋-bucketed local
-    * windows + a (grp × buckets)-bounded offset frame — no task ever
-    * sorts more than one value bucket), and the value-keyed rank frames
-    * join back to the cells. Moments are one keyed aggregate with
-    * DECIMAL(38,0) products (c·r², r·r' overflow int64 past ~10⁶-row
-    * groups). */
+    * doubled ranks from [[Prefix.runningSums]] keyed by group over ⌊v⌋
+    * buckets, and the value-keyed rank frames join back to the cells.
+    * Moments are one keyed aggregate with DECIMAL(38,0) products (c·r²,
+    * r·r' overflow int64 past ~10⁶-row groups). */
   def spearmanCorr(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
     val g = col(groupCol)
@@ -1020,10 +1018,9 @@ object Analytics {
       .groupBy(g, col(xCol), col(yCol)).agg(count(lit(1)).as("_c"))
       .localCheckpoint()
     // Doubled average rank per distinct value of `valCol` within each
-    // group: 2·cum_prev + cv + 1, cum_prev via bucket-local running
-    // sums + per-(grp, bucket) offsets (the q184 decomposition).
+    // group: 2·cum_prev + cv + 1.
     def ranks2(valCol: String, out: String): DataFrame = {
-      // Checkpointed: BOTH consumers below (the bucket-local running-sum
+      // Checkpointed: BOTH consumers in runningSums (the bucket-local
       // window and the offsets aggregate) otherwise re-run this whole
       // value-frame aggregation — for a near-unique value column that is
       // a duplicated corpus-sized exchange per leg (r22, guide §2.4
@@ -1033,19 +1030,10 @@ object Analytics {
         .agg(sum(col("_c")).as("_cv"))
         .withColumn("_bkt", floor(col("_v").cast("double")).cast("long"))
         .localCheckpoint()
-      val wLoc = Window.partitionBy(g, col("_bkt")).orderBy(col("_v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = vf.withColumn("_l", sum(col("_cv")).over(wLoc))
-      val wOff = Window.partitionBy(g).orderBy(col("_bkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = vf.groupBy(g, col("_bkt"))
-        .agg(sum(col("_cv")).as("_bc"))
-        .withColumn("_off", coalesce(sum(col("_bc")).over(wOff), lit(0L)))
-        .select(g, col("_bkt"), col("_off"))
-      local.join(offsets, Seq(groupCol, "_bkt"))
+      Prefix.runningSums(vf, Seq(groupCol), "_bkt", Seq(col("_v")),
+          Seq(col("_cv") -> "_cum"))
         .select(g, col("_v").as(valCol),
-          ((col("_off") + col("_l") - col("_cv")) * 2 + col("_cv") + 1)
-            .as(out))
+          ((col("_cum") - col("_cv")) * 2 + col("_cv") + 1).as(out))
     }
     val joined = cells
       .join(ranks2(xCol, "_rx"), Seq(groupCol, xCol))
@@ -1092,9 +1080,9 @@ object Analytics {
     * row side joins it on a ≤ 1000-key column.
     *
     * Shape: ONE corpus collapse to (group, value) cells; group ranks
-    * via the two-level bucketed prefix sums (no per-group corpus
-    * sort); the pooled side lives on the VALUE frame (bounded by the
-    * value domain, not the corpus) with one ordered cumulative pass;
+    * via [[Prefix.runningSums]] (no per-group corpus sort); the pooled
+    * side lives on the VALUE frame (bounded by the value domain, not the
+    * corpus) with one ordered cumulative pass;
     * the final join is per-mille-keyed. Output: one row per distinct
     * (group, value) — never per input row. */
   def quantileNormalize(df: DataFrame, groupCol: String,
@@ -1105,23 +1093,14 @@ object Analytics {
       .select(g, col(valCol).cast("long").as("_v"))
       .groupBy(g, col("_v")).agg(count(lit(1)).as("_c"))
       .localCheckpoint()
-    // Within-group doubled rank per distinct value (two-level bucketed
-    // prefix sums — q249's decomposition inlined over these cells).
-    val wLoc = Window.partitionBy(g, col("_bkt")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.partitionBy(g).orderBy(col("_bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    // Within-group doubled rank per distinct value (q249's rule).
     val vf = cells.withColumn("_bkt", floor(col("_v").cast("double") / 64)
       .cast("long"))
-    val local = vf.withColumn("_l", sum(col("_c")).over(wLoc))
-    val offsets = vf.groupBy(g, col("_bkt")).agg(sum(col("_c")).as("_bc"))
-      .withColumn("_off", coalesce(sum(col("_bc")).over(wOff), lit(0L)))
-      .select(g, col("_bkt"), col("_off"))
     val ng = cells.groupBy(g).agg(sum(col("_c")).as("_ng"))
-    val ranked = local.join(offsets, Seq(groupCol, "_bkt"))
+    val ranked = Prefix.runningSums(vf, Seq(groupCol), "_bkt", Seq(col("_v")),
+        Seq(col("_c") -> "_cum"))
       .join(ng, groupCol)
-      .withColumn("_r2",
-        (col("_off") + col("_l") - col("_c")) * 2 + col("_c") + 1)
+      .withColumn("_r2", (col("_cum") - col("_c")) * 2 + col("_c") + 1)
       .withColumn("pm",
         expr("(_r2 * 500 + _ng - 1) div _ng"))
     // Pooled per-mille grid on the value frame: v covers the pms whose
@@ -1285,10 +1264,8 @@ object Analytics {
     * snapshots/arms?): D = max over values of |F̂₁(v) − F̂₀(v)|, located.
     *
     * Everything up to the last step is INTEGER-exact: the corpus
-    * collapses to per-value class counts, cumulative counts use the
-    * two-level prefix-sum shape (per-⌊v⌋-bucket local running sums +
-    * broadcast bucket offsets — q140's discipline, never a single-
-    * partition global window), and the sup picks argmax of
+    * collapses to per-value class counts, cumulative counts are
+    * [[Prefix.runningSums]] over ⌊v⌋ buckets, and the sup picks argmax of
     * |c₁·n₀ − c₀·n₁| in DECIMAL integer arithmetic (the cross-product
     * overflows 64 bits past ~3·10⁹ rows) with the value as tie-break —
     * a deterministic TakeOrderedAndProject. ONE IEEE division at the
@@ -1301,23 +1278,13 @@ object Analytics {
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("d1"))
       .withColumn("bucket", floor(col("v")).cast("long"))
       .localCheckpoint()
-    val wLoc = Window.partitionBy(col("bucket")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = counts
-      .withColumn("l0", sum(col("d0")).over(wLoc))
-      .withColumn("l1", sum(col("d1")).over(wLoc))
-    val wOff = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.groupBy(col("bucket"))
-      .agg(sum(col("d0")).as("b0"), sum(col("d1")).as("b1"))
-      .withColumn("o0", coalesce(sum(col("b0")).over(wOff), lit(0L)))
-      .withColumn("o1", coalesce(sum(col("b1")).over(wOff), lit(0L)))
-      .select(col("bucket"), col("o0"), col("o1"))
     val totals = counts.agg(sum(col("d0")).as("n0"), sum(col("d1")).as("n1"))
-    local.join(broadcast(offsets), "bucket").crossJoin(broadcast(totals))
+    Prefix.runningSums(counts, Nil, "bucket", Seq(col("v")),
+        Seq(col("d0") -> "c0", col("d1") -> "c1"))
+      .crossJoin(broadcast(totals))
       .withColumn("dint",
-        abs((col("o1") + col("l1")).cast("decimal(19,0)") * col("n0")
-          - (col("o0") + col("l0")).cast("decimal(19,0)") * col("n1")))
+        abs(col("c1").cast("decimal(19,0)") * col("n0")
+          - col("c0").cast("decimal(19,0)") * col("n1")))
       .orderBy(col("dint").desc, col("v"))
       .limit(1)
       .select(col("n0"), col("n1"), col("v").as("at_v"),
@@ -1893,10 +1860,8 @@ object Analytics {
     * int64 past ~2M-row ties).
     *
     * Scale shape: the corpus collapses ONCE to distinct (grp, v) cells;
-    * the GLOBAL rank frame comes from the q249 two-level decomposition
-    * (⌊v⌋-bucket local windows + a buckets-bounded offset frame — the
-    * offset window is single-partition over ≤ |buckets| rows, never the
-    * corpus); ranks join back to cells value-keyed; everything after is
+    * the GLOBAL rank frame comes from [[Prefix.runningSums]] over ⌊v⌋
+    * buckets; ranks join back to cells value-keyed; everything after is
     * groups-bounded. */
   def kruskalWallis(df: DataFrame, groupCol: String,
       valCol: String): DataFrame = {
@@ -1910,24 +1875,18 @@ object Analytics {
     val vf = cells.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
       .withColumn("_bkt", floor(col("_v")).cast("long"))
       .localCheckpoint()
-    val wLoc = Window.partitionBy(col("_bkt")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = vf.withColumn("_l", sum(col("_cv")).over(wLoc))
-    val wOff = Window.orderBy(col("_bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vf.groupBy(col("_bkt")).agg(sum(col("_cv")).as("_bc"))
-      .withColumn("_off", coalesce(sum(col("_bc")).over(wOff), lit(0L)))
-      .select(col("_bkt"), col("_off"))
     // Checkpointed: consumed by BOTH the per-group rank-sum join (gsum)
     // and the tie-correction aggregate (ties) — without it the whole
     // window + offsets chain runs twice (r22, same duplicated-subtree
     // class as vf above).
-    val ranks = local.join(offsets, Seq("_bkt"))
-      .select(col("_v"),
-        ((col("_off") + col("_l") - col("_cv")) * 2 + col("_cv") + 1)
-          .as("_r2"),
-        col("_cv"))
+    val ranks = Prefix.runningSums(vf, Nil, "_bkt", Seq(col("_v")),
+        Seq(col("_cv") -> "_cum"))
+      .select(col("_v"), ((col("_cum") - col("_cv")) * 2 + col("_cv") + 1)
+        .as("_r2"), col("_cv"))
       .localCheckpoint()
+    // The eager checkpoint above is vf's only reader, and no leaf of the
+    // result reaches vf, so a release of the result would never free it.
+    Dedup.unpersistBlocks(vf)
     val gsum = cells.join(ranks.select(col("_v"), col("_r2")), Seq("_v"))
       .groupBy(col("grp"))
       .agg(sum(col("_c")).as("_ng"),
@@ -3359,14 +3318,9 @@ object Analytics {
     * change points (between change points concurrency is constant, so
     * sampling at deltas loses nothing).
     *
-    * Scale shape — the prefix sum is the two-level decomposition from
-    * [[Packing.packShards]], with the TIME BUCKET as the partition (range,
-    * not hash, because order matters here): deltas collapse per distinct
-    * timestamp (hash aggregate, corpus-sized but map-combinable), the
-    * within-bucket running sum is a bucket-partitioned window, and the
-    * cross-bucket offset is a running sum over per-bucket totals — a
-    * |buckets|-row frame that rejoins via broadcast. No single-partition
-    * window ever sees more than one bucket's change points.
+    * Scale shape: deltas collapse per distinct timestamp (hash aggregate,
+    * corpus-sized but map-combinable), then the prefix sum is
+    * [[Prefix.runningSums]] with the TIME BUCKET as the bucket.
     *
     * Deterministic: every value is integer (counts and epoch-micro
     * timestamps), so the hash gate is exact. */
@@ -3379,17 +3333,8 @@ object Analytics {
     val collapsed = deltas.groupBy(col("ts"))
       .agg(sum(col("d")).as("d"))
       .withColumn("bucket", expr(s"ts div ${bucketMicros}L"))
-    val wLoc = Window.partitionBy(col("bucket")).orderBy(col("ts"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = collapsed.withColumn("cum_in", sum(col("d")).over(wLoc))
-    val offsets = collapsed.groupBy(col("bucket"))
-      .agg(sum(col("d")).as("btot"))
-      .withColumn("offset", coalesce(
-        sum(col("btot")).over(Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    local.join(broadcast(offsets), "bucket")
-      .withColumn("conc", col("offset") + col("cum_in"))
+    Prefix.runningSums(collapsed, Nil, "bucket", Seq(col("ts")),
+        Seq(col("d") -> "conc"))
       .groupBy(col("bucket"))
       .agg(max(col("conc")).as("peak"), count(lit(1)).as("n_changes"))
       .select((col("bucket") * bucketMicros).as("bucket_us"),
@@ -3572,38 +3517,16 @@ object Analytics {
 
   // ----------------------------------- scale-safe exact global ntile --
 
-  /** Scale-correct exact global row index under a TOTAL order: range
-    * partition + within-partition sort, then the canonical two-pass
-    * `zipWithIndex` (per-partition counts → broadcast offsets) — the SNM /
-    * zone-map / q163 machinery, generalized to any schema. NEVER a
-    * single-partition `row_number` window: every partition ranks in
-    * parallel and only the per-partition COUNTS cross the driver. The
-    * order must be total (include a unique id) or the index is
-    * partition-boundary-dependent. Index is 1-based (row_number parity).
-    */
-  private[graft] def withGlobalIndex(df: DataFrame, order: Seq[Column],
-      idxName: String): DataFrame = {
-    val s = df.sparkSession
-    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        idxName, org.apache.spark.sql.types.LongType, nullable = false))
-    s.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L)) },
-      schema)
-  }
-
   /** Exact `ntile(n)` bucket as a pure function of (1-based global rank,
     * total count) — the SQL-standard distribution both Spark and DuckDB
     * implement: with q = c div n and rem = c mod n, the first `rem`
-    * buckets hold q+1 rows, the rest q. Combined with [[withGlobalIndex]]
-    * this replaces a single-partition global ntile window with a fully
-    * parallel two-pass plan while staying bit-identical to the window
-    * form (the oracle keeps plain `ntile`): rank ≤ (q+1)·rem lands in
-    * bucket ⌈rank/(q+1)⌉, the rest in rem + ⌈(rank − (q+1)·rem)/q⌉. The
-    * `greatest(q, 1)` guards the (dead when c < n) second branch against
-    * an ANSI divide-by-zero. */
+    * buckets hold q+1 rows, the rest q. Combined with
+    * [[Prefix.withGlobalIndex]] this replaces a single-partition global
+    * ntile window with a fully parallel two-pass plan while staying
+    * bit-identical to the window form (the oracle keeps plain `ntile`):
+    * rank ≤ (q+1)·rem lands in bucket ⌈rank/(q+1)⌉, the rest in
+    * rem + ⌈(rank − (q+1)·rem)/q⌉. The `greatest(q, 1)` guards the
+    * (dead when c < n) second branch against an ANSI divide-by-zero. */
   private[graft] def ntileFromIndex(rnCol: String, ctCol: String, n: Int): Column = {
     // SQL `div` (exact long division) rather than floor(a / b): a double
     // quotient of two ~1e12 longs can land one ulp under an exact integer
@@ -3627,14 +3550,14 @@ object Analytics {
     * One keyed aggregate collapses orders to a customer frame first.
     * Each quintile score is an exact-ntile over a TOTAL order
     * (metric, custkey) so tie placement is deterministic cross-engine,
-    * computed scale-safely: [[withGlobalIndex]] (range shuffle +
-    * parallel per-partition rank) + [[ntileFromIndex]] — no
-    * single-partition window anywhere, so the plan survives 100×
-    * customer cardinality; the oracle keeps plain `ntile`, which the
-    * formula matches row-for-row. Scores are BIGINT (the q171 lesson:
-    * Spark's ntile emits int32, DuckDB int64) and point "5 = best":
-    * recency sorts DESC (most recent customers land in the last
-    * bucket), frequency and monetary ASC (heaviest land last). */
+    * computed scale-safely: [[Prefix.withGlobalIndex]] +
+    * [[ntileFromIndex]] — no single-partition window anywhere, so the
+    * plan survives 100× customer cardinality; the oracle keeps plain
+    * `ntile`, which the formula matches row-for-row. Scores are BIGINT
+    * (the q171 lesson: Spark's ntile emits int32, DuckDB int64) and
+    * point "5 = best": recency sorts DESC (most recent customers land
+    * in the last bucket), frequency and monetary ASC (heaviest land
+    * last). */
   def rfmSegments(orders: DataFrame, custCol: String, dateCol: String,
       amtCol: String): DataFrame = {
     val per = orders.groupBy(col(custCol))
@@ -3656,10 +3579,10 @@ object Analytics {
     // (PlanSpec/ExplainDump/each bench sample) pays all three passes.
     // Acceptable for the customer-bounded frame; revisit (checkpoint
     // after i1/i2 too) only if the tier bench prices the recompute.
-    val i1 = withGlobalIndex(base,
+    val i1 = Prefix.withGlobalIndex(base,
       Seq(col("recency_days").desc, col(custCol)), "_rnr")
-    val i2 = withGlobalIndex(i1, Seq(col("frequency"), col(custCol)), "_rnf")
-    val i3 = withGlobalIndex(i2, Seq(col("monetary"), col(custCol)), "_rnm")
+    val i2 = Prefix.withGlobalIndex(i1, Seq(col("frequency"), col(custCol)), "_rnf")
+    val i3 = Prefix.withGlobalIndex(i2, Seq(col("monetary"), col(custCol)), "_rnm")
       .localCheckpoint()
     // Total count as a broadcast 1-row frame (max of a 1..c permutation),
     // off the checkpointed index so the 3-pass chain computes once.
@@ -3689,9 +3612,8 @@ object Analytics {
     * captured — "the top 20% of scores capture 54% of converters".
     *
     * Determinism + scale: deciles are exact ntile under the TOTAL
-    * (score DESC, unit) order via [[withGlobalIndex]] +
-    * [[ntileFromIndex]] (the q198 machinery — range shuffle + parallel
-    * rank, never a single-partition window; the oracle keeps plain
+    * (score DESC, unit) order via [[Prefix.withGlobalIndex]] +
+    * [[ntileFromIndex]] (the q198 machinery; the oracle keeps plain
     * `ntile`, which the formula matches row-for-row). The corpus
     * collapses to the unit frame FIRST, so the window pipeline runs on
     * one row per unit. Rates and lift are pinned scalar IEEE chains on
@@ -3703,7 +3625,7 @@ object Analytics {
     * by construction. Output: 10 rows. */
   def liftTable(units: DataFrame, idCol: String, scoreCol: String,
       respCol: String, buckets: Int = 10): DataFrame = {
-    val idx = withGlobalIndex(
+    val idx = Prefix.withGlobalIndex(
       units.select(col(idCol), col(scoreCol), col(respCol)),
       Seq(col(scoreCol).desc, col(idCol)), "_rn").localCheckpoint()
     val withCt = idx.crossJoin(broadcast(idx.agg(max(col("_rn")).as("_ct"))))
@@ -3851,10 +3773,9 @@ object Analytics {
     * (feature, id) order).
     *
     * Scale: the equal-frequency bin is the exact-ntile distribution but
-    * computed scale-safely — [[withGlobalIndex]] (one parallel range
-    * shuffle of the 3-column projection, per-partition rank, offsets
-    * broadcast) + [[ntileFromIndex]] — never a single-partition window
-    * over the corpus; the corpus then collapses to the bins-bounded
+    * computed scale-safely — [[Prefix.withGlobalIndex]] over the
+    * 3-column projection + [[ntileFromIndex]] — never a single-partition
+    * window over the corpus; the corpus then collapses to the bins-bounded
     * frame in one keyed aggregate. The oracle keeps plain `ntile`,
     * which the formula matches row-for-row. */
   def woeIv(df: DataFrame, featureCol: String, idCol: String,
@@ -3878,7 +3799,7 @@ object Analytics {
     // a cheap scan of the checkpointed blocks. The structural plan
     // fingerprint carries no literals, so the value embedding stays
     // golden-safe.
-    val indexed = withGlobalIndex(base,
+    val indexed = Prefix.withGlobalIndex(base,
       Seq(col(featureCol), col(idCol)), "_rn")
       .localCheckpoint()
     val c = indexed.count()
@@ -4204,9 +4125,8 @@ object Analytics {
     * division over exact integer operands, round(6).
     *
     * Shape: one corpus-wide unit collapse (map-side partials), then
-    * everything runs on the (group, value) frame — bucket-local
-    * windows + per-(group, bucket) offsets for the strictly-smaller
-    * cumulative (the q249/q184 two-level decomposition: no
+    * everything runs on the (group, value) frame — the strictly-smaller
+    * cumulative is [[Prefix.runningSums]] keyed by group (no
     * group-partitioned corpus window, so a few huge groups cannot
     * funnel the corpus through single tasks), and one groups-bounded
     * finalize. */
@@ -4220,18 +4140,10 @@ object Analytics {
       .agg(count(lit(1)).as("_cv"))
       .withColumn("_bkt", expr("_v div 16"))
       .localCheckpoint()
-    val wLoc = Window.partitionBy(g, col("_bkt")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = vf.withColumn("_l", sum(col("_cv")).over(wLoc))
-    val wOff = Window.partitionBy(g).orderBy(col("_bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vf.groupBy(g, col("_bkt"))
-      .agg(sum(col("_cv")).as("_bc"))
-      .withColumn("_off", coalesce(sum(col("_bc")).over(wOff), lit(0L)))
-      .select(g, col("_bkt"), col("_off"))
-    val ranked = local.join(offsets, Seq(groupCol, "_bkt"))
+    val ranked = Prefix.runningSums(vf, Seq(groupCol), "_bkt", Seq(col("_v")),
+        Seq(col("_cv") -> "_cum"))
       // units strictly below this value block
-      .withColumn("_prev", col("_off") + col("_l") - col("_cv"))
+      .withColumn("_prev", col("_cum") - col("_cv"))
       // the block's exact DOUBLED Σ i·x — 2·Σi over a block of c at
       // positions prev+1..prev+c is c·(2·prev + c + 1), so the term is
       // pure multiplication (no division anywhere, no parity question)

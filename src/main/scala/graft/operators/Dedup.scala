@@ -742,12 +742,10 @@ object Dedup {
     * prefix, SNM catches any pair the sort order puts near each other —
     * the two are complementary passes in production ER.
     *
-    * The global sort index is assigned scale-correctly: range partition +
-    * within-partition sort on the TOTAL key (sk, id), then the two-pass
-    * `zipWithIndex` (per-partition counts → broadcast offsets) — never a
-    * single-partition row_number window. Window pairs come from an
-    * EQUALITY join on the rank block `rk div w` (a pair ≤ w−1 apart spans
-    * at most two adjacent blocks, so x joins blocks {b, b+1}), then the
+    * The global sort index is [[Prefix.withGlobalIndex]] under the TOTAL
+    * key (sk, id). Window pairs come from an EQUALITY join on the rank
+    * block `rk div w` (a pair ≤ w−1 apart spans at most two adjacent
+    * blocks, so x joins blocks {b, b+1}), then the
     * exact rank-distance filter and the thresholded codegen
     * `levenshtein(·, ·, maxDist)` (early-exits past the bound) — 2·w
     * candidates per row, O(n·w) total, never n².
@@ -757,28 +755,13 @@ object Dedup {
   def sortedNeighborhood(df: DataFrame, idCol: String, keyCol: String,
       w: Int = 5, maxDist: Int = 3): DataFrame = {
     require(w >= 2 && w <= 1000, s"sortedNeighborhood: w must be in [2, 1000], got $w")
-    val s = df.sparkSession
-    // id must survive the long cast (a string id nulls out silently) — a
-    // null here would NPE inside the rank map on the executor
+    // id must survive the long cast (a string id nulls out silently): a
+    // null id would break the total (sk, id) order the index needs
     val base = df.filter(col(keyCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(keyCol).cast("string").as("sk"))
       .filter(col("id").isNotNull)
-    val sorted = base.repartitionByRange(col("sk"), col("id"))
-      .sortWithinPartitions(col("sk"), col("id"))
-    // zipWithIndex = the canonical two-pass global index (count pass +
-    // offset broadcast) over the range-partitioned total order; the total
-    // (sk, id) key makes the index partition-boundary-independent.
-    val indexed = s.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row(r.getLong(0), r.getString(1), i)
-      },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("sk",
-          org.apache.spark.sql.types.StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("rk",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    val indexed = Prefix.withGlobalIndex(base, Seq(col("sk"), col("id")), "_idx")
+      .select(col("id"), col("sk"), (col("_idx") - 1).as("rk"))
       .withColumn("blk", expr(s"rk div $w"))
       .localCheckpoint()
     // The probe side explodes into ITS OWN block and the next one, so the

@@ -68,12 +68,11 @@ object Layout {
     * ranges, so y-selective boxes hit every file — this operator puts the
     * number on that claim, per layout, per box.
     *
-    * The global file rank uses the same scale-correct two-pass machinery
-    * as the SNM sort (range partition + per-partition counts + offset
-    * broadcast via zipWithIndex) — never a single-partition row_number.
-    * Zone maps are one bounded groupBy (n_files rows); the box workload is
-    * a grid² literal frame cross-joined against the zone maps
-    * (broadcast-tiny by construction). All arithmetic is integer-exact. */
+    * The global file rank is [[Prefix.withGlobalIndex]] under each
+    * layout's total order. Zone maps are one bounded groupBy (n_files
+    * rows); the box workload is a grid² literal frame cross-joined against
+    * the zone maps (broadcast-tiny by construction). All arithmetic is
+    * integer-exact. */
   def skipStats(df: DataFrame, xCol: String, yCol: String,
       rowsPerFile: Int = 1000, grid: Int = 4): DataFrame = {
     require(rowsPerFile >= 1 && grid >= 1 && grid <= 64,
@@ -102,16 +101,14 @@ object Layout {
         Seq("box_id", "xlo", "xhi", "ylo", "yhi").map(n =>
           org.apache.spark.sql.types.StructField(n,
             org.apache.spark.sql.types.LongType, nullable = false))))
+    // Checkpointed so that `base` has no reader left once both layouts are
+    // ranked: the index reads it through an RDD, which no leaf of the
+    // result reaches, so only the release below can free it.
     def zones(order: Seq[Column], layout: String): DataFrame = {
-      val sorted = base.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-      val ranked = s.createDataFrame(
-        sorted.rdd.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(r.getLong(0), r.getLong(1), i / rowsPerFile)
-        },
-        org.apache.spark.sql.types.StructType(
-          Seq("x", "y", "file_id").map(n =>
-            org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.LongType, nullable = false))))
+      val ranked = Prefix.withGlobalIndex(base, order, "_idx")
+        .select(col("x"), col("y"),
+          expr(s"(_idx - 1) div $rowsPerFile").as("file_id"))
+        .localCheckpoint()
       ranked.groupBy(col("file_id"))
         .agg(min("x").as("min_x"), max("x").as("max_x"),
           min("y").as("min_y"), max("y").as("max_y"))
@@ -119,6 +116,7 @@ object Layout {
     }
     val zm = zones(Seq(col("zval"), col("x"), col("y")), "zorder")
       .unionAll(zones(Seq(col("x"), col("y")), "linear"))
+    Dedup.unpersistBlocks(base)
     val files = zm.groupBy(col("layout")).agg(count(lit(1)).as("n_files"))
     zm.join(broadcast(boxes),
         col("min_x") <= col("xhi") && col("max_x") >= col("xlo") &&

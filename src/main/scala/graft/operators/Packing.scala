@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Token-budget shard packing — the "sequence packing" step of an LLM
@@ -13,15 +12,9 @@ import graft.Tables
   * tokens each, engine-independent membership (re-runnable anywhere,
   * same shards).
   *
-  * The global prefix sum is the distributed two-level form, not a
-  * single-partition window: documents hash into B buckets; within each
-  * bucket a partitioned window computes the local prefix sum (shuffle on
-  * bucket — B-way parallel); the B per-bucket totals (B rows, constant)
-  * are offset-summed on one tiny partition and broadcast back. Identical
-  * to the one global cumulative sum ordered by (bucket, hash, id) — which
-  * is exactly what the DuckDB oracle replays — but no stage ever sees more
-  * than 1/B of the data in one task. Same decomposition q90 uses for its
-  * global sort (Parity.scala range-partition + boundary fold).
+  * The global prefix sum is [[Prefix.runningSums]] over B hash buckets,
+  * equal to the one global running sum ordered by (bucket, hash, id) that
+  * the DuckDB oracle replays.
   */
 object Packing {
   type Q = (SparkSession, String) => DataFrame
@@ -33,30 +26,17 @@ object Packing {
   /** Pack rows carrying `tokenCol` tokens into contiguous shards of at most
     * ~`budget` tokens (a document never splits; a shard may overflow by at
     * most one document — first-fit-in-fixed-order semantics). Returns the
-    * input plus (bucket, cum, shard). */
+    * input plus (_h, _bucket, _cum, shard). */
   def packShards(df: DataFrame, idCol: String, tokenCol: String,
       budget: Long): DataFrame = {
     require(budget >= 1, s"packShards: budget must be >= 1, got $budget")
-    require(!df.columns.exists(
-        Set("_h", "_bucket", "_cum_in", "_btot", "_offset", "_cum", "shard")),
-      "packShards: input must not carry reserved _h/_bucket/_cum*/shard columns")
+    require(!df.columns.exists(Set("_h", "_bucket", "_cum", "shard")),
+      "packShards: input must not carry reserved _h/_bucket/_cum/shard columns")
     val hashed = df
       .withColumn("_h", expr(CrossHash.h60Expr(idCol)))
       .withColumn("_bucket", (col("_h") % Buckets).cast("int"))
-    val wIn = Window.partitionBy(col("_bucket"))
-      .orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = hashed.withColumn("_cum_in", sum(col(tokenCol)).over(wIn))
-    // B rows total: the offset window runs on one task over a constant-size
-    // frame, then rejoins via broadcast — never a wide single-partition sort.
-    val offsets = hashed.groupBy(col("_bucket"))
-      .agg(sum(col(tokenCol)).as("_btot"))
-      .withColumn("_offset", coalesce(
-        sum(col("_btot")).over(Window.orderBy(col("_bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_bucket"), col("_offset"))
-    local.join(broadcast(offsets), "_bucket")
-      .withColumn("_cum", col("_offset") + col("_cum_in"))
+    Prefix.runningSums(hashed, Nil, "_bucket", Seq(col("_h"), col(idCol)),
+        Seq(col(tokenCol) -> "_cum"))
       .withColumn("shard", expr(s"(_cum - $tokenCol) div ${budget}L"))
   }
 
@@ -82,33 +62,21 @@ object Packing {
     * TOKEN budget in one fixed order; this permutes BY EPOCH and bins by
     * row count.
     *
-    * The global rank is the same two-level decomposition as the prefix
-    * sum above (bucketed local row_number + a Buckets-row offset frame
-    * broadcast back) — identical to one global `row_number() OVER
-    * (ORDER BY bucket, hash, id)` (the oracle's replay) with no
-    * single-partition window anywhere. */
+    * The global rank is a [[Prefix.runningSums]] of 1 in the same
+    * bucketed order, identical to one global `row_number() OVER (ORDER BY
+    * bucket, hash, id)` (the oracle's replay). */
   def epochShuffle(df: DataFrame, idCol: String, epoch: Int,
       rowsPerShard: Long): DataFrame = {
     require(rowsPerShard >= 1,
       s"epochShuffle: rowsPerShard must be >= 1, got $rowsPerShard")
-    require(!df.columns.exists(
-        Set("_h", "_bucket", "_rn", "_bcnt", "_offset", "shard", "pos")),
-      "epochShuffle: input must not carry reserved _h/_bucket/_rn/shard/pos columns")
+    require(!df.columns.exists(Set("_h", "_bucket", "_rank", "shard", "pos")),
+      "epochShuffle: input must not carry reserved _h/_bucket/_rank/shard/pos columns")
     val hashed = df
       .withColumn("_h", expr(CrossHash.h60Expr(
         s"concat('$epoch', ':', cast($idCol as string))")))
       .withColumn("_bucket", (col("_h") % Buckets).cast("int"))
-    val local = hashed.withColumn("_rn", row_number().over(
-      Window.partitionBy(col("_bucket")).orderBy(col("_h"), col(idCol)))
-      .cast("long"))
-    val offsets = hashed.groupBy(col("_bucket"))
-      .agg(count(lit(1)).as("_bcnt"))
-      .withColumn("_offset", coalesce(
-        sum(col("_bcnt")).over(Window.orderBy(col("_bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_bucket"), col("_offset"))
-    local.join(broadcast(offsets), "_bucket")
-      .withColumn("_rank", col("_offset") + col("_rn"))
+    Prefix.runningSums(hashed, Nil, "_bucket", Seq(col("_h"), col(idCol)),
+        Seq(lit(1L) -> "_rank"))
       .withColumn("shard", expr(s"(_rank - 1) div ${rowsPerShard}L"))
       .withColumn("pos", expr(s"(_rank - 1) % ${rowsPerShard}L"))
   }

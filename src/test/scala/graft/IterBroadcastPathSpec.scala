@@ -118,9 +118,17 @@ class IterBroadcastPathSpec extends SparkSpec {
     assert(got == PinnedJobs, s"job counts (default, ceiling 0): $got")
   }
 
-  test("round-loop operators and q54/q214 leave no persisted RDD after release") {
-    val runs = roundLoopOps ++ Seq(
-      "q54_neardup_components", "q214_canonical_pick").map(q =>
+  // The queries whose operators run Prefix's running sums or global index:
+  // each checkpoints intermediate frames that the release must reach.
+  private val PrefixQueries = Seq("q74_pack_shards", "q140_concurrency",
+    "q163_sorted_neighborhood", "q169_skip_stats", "q184_ks_test",
+    "q198_rfm_segments", "q209_woe_iv", "q242_decile_lift",
+    "q243_epoch_shuffle", "q249_spearman_corr", "q250_quantile_normalize",
+    "q253_kruskal_wallis", "q269_concentration")
+
+  test("round-loop ops, q54/q214 and Prefix queries leave no persisted RDD") {
+    val runs = roundLoopOps ++ (Seq(
+      "q54_neardup_components", "q214_canonical_pick") ++ PrefixQueries).map(q =>
       q -> (() => SparkEntry.queries(q)(spark, sf0001)))
     val leaks = runs.map { case (k, f) => k -> runReleased(f)._2.size }
       .filter(_._2 > 0)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.operators.Analytics
+import graft.operators.{Analytics, Prefix}
 
 /** Locks `Analytics.ntileFromIndex` — the closed-form exact-ntile bucket
   * used by the scale-safe two-pass global rank (q198/q209) — against
@@ -17,7 +17,8 @@ import graft.operators.Analytics
   * c % n == 0, and n == 1 edges, plus a seeded random sweep of the pure
   * arithmetic against the naive SQL-standard cumulative model, plus the
   * full two-pass pipeline (withGlobalIndex over a multi-partition frame
-  * with TIES in the leading order column) vs the plain window form.
+  * with TIES in the leading order column) vs the plain window forms of
+  * both the index and the bucket.
   */
 class NtileFormulaSpec extends SparkSpec {
 
@@ -94,9 +95,14 @@ class NtileFormulaSpec extends SparkSpec {
     val df = spark.range(c)
       .select(col("id"), pmod(col("id") * 37L, lit(7)).as("k"))
       .repartition(4)
-    val indexed = Analytics.withGlobalIndex(df,
+    val indexed = Prefix.withGlobalIndex(df,
         Seq(col("k"), col("id")), "_rn")
       .withColumn("_ct", lit(c))
+    // the index itself is row_number() under the same total order
+    val rn = indexed.select(col("id"),
+      (col("_rn") - row_number().over(Window.orderBy(col("k"), col("id"))))
+        .as("diff"))
+    assert(rn.filter(col("diff") =!= 0).count() == 0 && rn.count() == c)
     for (n <- Seq(1, 4, 5, 10, 250)) {
       val got = indexed
         .select(col("id"), Analytics.ntileFromIndex("_rn", "_ct", n).as("b"))
